@@ -341,10 +341,10 @@ def test_repeated_spans_bucketed_never_all_pairs(dfs, spark):
     broadcast (the measured 100x-probe OOM mode) and a hash build
     cannot spill (the measured 1000x wall). The pin inspects a
     materialize=False construction: the registered form
-    localCheckpoints ctext (lazily since round 12 — the logical plan
-    truncates at the checkpoint either way), which hides everything
-    upstream of the verify stage from explain — same checkpoint-
-    invisibility note as the prebuilt-IVF plan test."""
+    localCheckpoints ctext, and the logical plan truncates at the
+    checkpoint, which hides everything upstream of the verify stage
+    from explain — same checkpoint-invisibility note as the
+    prebuilt-IVF plan test."""
     for name in ("dedup_repeated_spans", "dedup_repeated_spans_excise"):
         assert not pi.uses_cartesian_or_bnl(dfs[name]), name
     from tugas_2_big_data_spark.operators import dedup

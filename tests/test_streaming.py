@@ -128,6 +128,31 @@ def test_dedup_stream_drops_redeliveries(spark, stream_events):
     assert len(ids) == n_batch
 
 
+def test_registry_stream_query_leaves_no_sink_view(spark):
+    """The memory-sink drain drops its temp view once the result frame
+    is built; the frame still reads the sink's rows afterwards."""
+    from tugas_2_big_data_spark.queries import queries
+
+    runs = [
+        queries()["stream_dedup_keys"](spark, SF_UNIT).collect()
+        for _ in range(3)
+    ]
+    assert not [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("q_stream_")
+    ]
+    expected = set(
+        load_table(spark, "events", SF_UNIT)
+        .select("user_id", "event_type")
+        .distinct()
+        .collect()
+    )
+    for rows in runs:
+        assert len(rows) == len(expected)
+        assert set(rows) == expected
+
+
 def test_sessionize_runs(spark, stream_events):
     rows = se.run_to_memory(
         se.sessionize(stream_events, gap="30 minutes"), "t_sessions"

@@ -66,32 +66,39 @@ def main() -> None:
         return df
 
     # A — corpus shingle/hash pass, materialized
-    sets = dedup.hashed_shingle_sets(docs).localCheckpoint(eager=False)
-    stage("A_shingle_sets", lambda: sets)
+    sets = stage(
+        "A_shingle_sets",
+        lambda: dedup.hashed_shingle_sets(docs).localCheckpoint(),
+    )
 
     sized = sets.select(
         F.col("doc_id"), F.size("shingles").alias("sz"), "shingles"
     )
-    ex = sized.select(
-        "doc_id", "sz", F.explode("shingles").alias("shingle")
-    ).localCheckpoint(eager=False)
-    stage("A2_exploded", lambda: ex)
+    ex = stage(
+        "A2_exploded",
+        lambda: sized.select(
+            "doc_id", "sz", F.explode("shingles").alias("shingle")
+        ).localCheckpoint(),
+    )
 
     # B — document-frequency table
-    freq = ex.groupBy("shingle").agg(
-        F.count(F.lit(1)).alias("shingle_df")
-    ).localCheckpoint(eager=False)
-    stage("B_freq", lambda: freq)
+    freq = stage(
+        "B_freq",
+        lambda: ex.groupBy("shingle").agg(
+            F.count(F.lit(1)).alias("shingle_df")
+        ).localCheckpoint(),
+    )
 
     # C — prefix selection
     w = Window.partitionBy("doc_id").orderBy("shingle_df", "shingle")
-    prefix = (
-        ex.join(freq.hint("shuffle_hash"), "shingle")
+    prefix = stage(
+        "C_prefix",
+        lambda: ex.join(freq.hint("shuffle_hash"), "shingle")
         .withColumn("pos", F.row_number().over(w))
         .filter(F.col("pos") <= _prefix_pos_bound(F.col("sz"), threshold))
         .select("doc_id", "sz", "shingle")
-    ).localCheckpoint(eager=False)
-    stage("C_prefix", lambda: prefix)
+        .localCheckpoint(),
+    )
 
     # D — candidate self-join
     a = prefix.select(
@@ -100,8 +107,9 @@ def main() -> None:
     b = prefix.select(
         F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"), "shingle"
     )
-    cand = (
-        a.join(
+    cand = stage(
+        "D_candidates",
+        lambda: a.join(
             b,
             (a["shingle"] == b["shingle"])
             & (F.col("id_a") < F.col("id_b"))
@@ -110,8 +118,8 @@ def main() -> None:
         )
         .select("id_a", "id_b")
         .distinct()
-    ).localCheckpoint(eager=False)
-    stage("D_candidates", lambda: cand)
+        .localCheckpoint(),
+    )
 
     # E — exact verify
     stage(

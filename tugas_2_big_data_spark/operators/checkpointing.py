@@ -1,9 +1,25 @@
-"""Lineage truncation policy for iterative operators.
+"""Lineage truncation policy: one rule for every cut in the package.
 
-Fixpoint loops (connected components, Lloyd rounds, BPE merges) nest
-their plan once per round; without truncation the plan tree — and
-re-computation on any partition loss — grows unboundedly. Two honest
-options, chosen by one parameter:
+The rule: a cut is materialized when it is taken. Every
+``localCheckpoint``/``checkpoint``/``materialize`` call in this package
+uses Spark's eager default, so the cut's blocks exist before the next
+line of the caller runs, and no query depends on which later action
+happens to fill a cut first.
+
+There is no lazy form, because under AQE it buys little. Spark builds
+a checkpoint from ``physicalPlan.execute()``, and an adaptive plan runs
+every exchange stage of its plan inside that call. A lazy cut therefore
+already runs all of its upstream shuffle stages when it is taken, and
+defers only its final result stage. Measured at sf0.01 on ``local[4]``,
+``dedup_embedding_components`` ran 17 jobs while it was built with its
+four cuts lazy, and 21 with them eager. The eager form adds that one
+final-stage job per cut, and in exchange the cut's cost shows where it
+is taken, not inside a broadcast future or a later consumer. Over the
+48 queries that had lazy cuts the eager form's median wall time was
+within noise of the lazy one's; where one extra job per cut was
+measurable, the fix was fewer cuts, not lazy ones.
+
+Where the blocks live is the one choice left, made by ``checkpoint_dir``:
 
 - ``checkpoint_dir=None`` (default): ``localCheckpoint`` — blocks are
   pinned to executor storage. Fast (no FS round-trip) and exactly
@@ -13,6 +29,10 @@ options, chosen by one parameter:
   directory (HDFS/object store on a cluster) — survives executor loss;
   the per-round write cost is bounded by the state size, which for
   these operators is the label/vocab relation, not the corpus.
+
+Fixpoint loops (connected components, Lloyd rounds, BPE merges) nest
+their plan once per round; without a cut the plan tree — and
+re-computation on any partition loss — grows unboundedly.
 """
 
 from __future__ import annotations
@@ -20,22 +40,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def materialize(
-    df: DataFrame,
-    checkpoint_dir: str | None = None,
-    eager: bool = True,
-) -> DataFrame:
-    """Cut lineage: reliable checkpoint into `checkpoint_dir` when
-    given, else localCheckpoint.
-
-    ``eager=False`` defers the materializing job to the caller's next
-    action over the returned frame (the lineage cut is unchanged —
-    the checkpoint populates when first computed). Fixpoint loops that
-    follow each round's checkpoint with a control-flow action (the
-    convergence count) use this to pay ONE job per round instead of
-    two: the count materializes the checkpoint as a side effect."""
+def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+    """Cut lineage now: reliable checkpoint into `checkpoint_dir` when
+    given, else localCheckpoint."""
     if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint()
     sc = df.sparkSession.sparkContext
     sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=eager)
+    return df.checkpoint()

@@ -509,9 +509,7 @@ def jaccard_pairs_prefix(
     mk_sets = hashed_shingle_sets if hashed else shingle_sets
     sets = mk_sets(df, text_col, id_col, n)
     if materialize:
-        # lazy: all consumers sit inside the caller's action; the
-        # first one populates the cut with no blocking driver job
-        sets = sets.localCheckpoint(eager=False)
+        sets = sets.localCheckpoint()
     sized = sets.select(
         F.col(id_col), F.size("shingles").alias("sz"), "shingles"
     )
@@ -739,9 +737,7 @@ def containment_pairs_prefix(
     mk_sets = hashed_shingle_sets if hashed else shingle_sets
     sets = mk_sets(df, text_col, id_col, n)
     if materialize:
-        # lazy: all consumers sit inside the caller's action; the
-        # first one populates the cut with no blocking driver job
-        sets = sets.localCheckpoint(eager=False)
+        sets = sets.localCheckpoint()
     ex = sets.select(
         F.col(id_col),
         F.size("shingles").alias("sz"),
@@ -1111,7 +1107,7 @@ def repeated_spans(
         raise ValueError(f"unknown keep policy: {keep!r}")
     toks = _span_tokens(df, text_col, id_col, k)
     if materialize:
-        toks = toks.localCheckpoint(eager=False)
+        toks = toks.localCheckpoint()
     grams = toks.select(
         F.col(id_col),
         F.posexplode(
@@ -1122,7 +1118,7 @@ def repeated_spans(
         ).alias("_p0", "_gh"),
     ).select(F.col(id_col), (F.col("_p0") + 1).alias("pos"), "_gh")
     if materialize:
-        grams = grams.localCheckpoint(eager=False)
+        grams = grams.localCheckpoint()
     hot = (
         grams.groupBy("_gh")
         .agg(
@@ -1148,7 +1144,7 @@ def repeated_spans(
         # legs); without this the candidate-join lineage re-executes
         # for the broadcast leg. 8-byte fingerprints, not gram strings
         # — this block store was the 1000×-probe heap ceiling
-        ctext = ctext.localCheckpoint(eager=False)
+        ctext = ctext.localCheckpoint()
     vg = (
         ctext.groupBy("_gt")
         .agg(
@@ -1433,8 +1429,8 @@ def benchmark_span_overlap(
     toks_d = _span_tokens(docs, text_col, id_col, k)
     toks_b = _span_tokens(benchmark, text_col, id_col, k)
     if materialize:
-        toks_d = toks_d.localCheckpoint(eager=False)
-        toks_b = toks_b.localCheckpoint(eager=False)
+        toks_d = toks_d.localCheckpoint()
+        toks_b = toks_b.localCheckpoint()
 
     def grams_of(toks):
         return toks.select(
@@ -1452,8 +1448,8 @@ def benchmark_span_overlap(
     gd = grams_of(toks_d)
     gb = grams_of(toks_b)
     if materialize:
-        gd = gd.localCheckpoint(eager=False)
-        gb = gb.localCheckpoint(eager=False)
+        gd = gd.localCheckpoint()
+        gb = gb.localCheckpoint()
     # `broadcast_benchmark` (default): both corpus-side gram joins pin
     # a broadcast of the (distinct, benchmark-derived, small-by-
     # definition) key set, making them MAP-ONLY — a boilerplate gram

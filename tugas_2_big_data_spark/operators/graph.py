@@ -60,34 +60,21 @@ def pagerank_fixed(
     joins; the per-edge contribution stays `_pr / _d` — the identical
     division, so FP results are unchanged). Per iteration that leaves
     one edges-to-ranks join (shuffle keyed src — AQE broadcasts the
-    rank relation when small) + one (dst) hash aggregate. Iterates are
-    localCheckpointed LAZILY: with no intra-loop action Spark's
-    doCheckpoint only descends to the outermost marked RDD, so the
-    re-execution bound is CACHE-based (each iterate's persist blocks
-    are populated and read back; an executor loss recomputes the
-    nested chain — acceptable here, localCheckpoint already forfeits
-    the job on executor loss). Materialization happens inside the
-    caller's single action instead of one eager driver-blocking job
-    per iteration — measured
-    4.2 s → ~2.5 s on the sf0.1 near-dup graph purely from removing
-    the per-iteration job barriers; on a cluster the same change
-    removes iters scheduler round-trips. Ranks are rounded only at
-    the END; intermediate iterates keep full doubles.
+    rank relation when small) + one (dst) hash aggregate. Each iterate
+    is localCheckpointed, so the plan stays one round deep. Ranks are
+    rounded only at the END; intermediate iterates keep full doubles.
     """
     # materialize ONCE: the edge relation is consumed 2x (degree
     # aggregate + the contribution loop), and in this engine it is
     # typically the tail of an expensive pipeline (LSH verify) —
     # without the checkpoint every consumer would re-execute that
-    # whole lineage. LAZY (round 12): the node count below is the
-    # loop's one unavoidable driver action; it materializes edges and
-    # nodes together, so the pre-loop now costs ONE driver job
-    # instead of three eager-checkpoint barriers plus the count
-    edges = edges.localCheckpoint(eager=False)
+    # whole lineage
+    edges = edges.localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
@@ -96,10 +83,7 @@ def pagerank_fixed(
     cedges = (
         edges.join(deg, "src")
         .select("src", "dst", "_d")
-        # lazy: consumed `iters` times inside the caller's single
-        # action — first use populates the cut, later iterations read
-        # the cached blocks
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     base = (1.0 - damping) / n_nodes
     ranks = nodes.select("v", F.lit(1.0 / n_nodes).alias("_pr"))
@@ -119,7 +103,7 @@ def pagerank_fixed(
                     + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
                 ).alias("_pr"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return ranks.select("v", F.round(F.col("_pr"), round_to).alias("pagerank"))
 
@@ -157,11 +141,9 @@ def k_hop_reach(edges: DataFrame, k: int = 3) -> DataFrame:
     as pagerank_fixed, with output bounded by sum of reach-set sizes
     (at 100 TB this is run on the near-dup graph, which is sparse by
     construction — LSH only emits verified pairs). Edges are
-    materialized once for the same reason as pagerank_fixed — lazily:
-    every consumer sits inside the caller's single action, so the
-    first hop populates the cut with no separate driver job.
+    materialized once for the same reason as pagerank_fixed.
     """
-    edges = edges.localCheckpoint(eager=False)
+    edges = edges.localCheckpoint()
     # self-loops are dropped from the BASE relation too, not just from
     # expansions — otherwise a self-loop edge makes a node count itself
     # in n_reachable, contradicting the "OTHER nodes" contract.
@@ -181,14 +163,7 @@ def k_hop_reach(edges: DataFrame, k: int = 3) -> DataFrame:
             .select("src", F.col("_nxt").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
         )
-        # lazy lineage cut (same policy as pagerank_fixed): the next
-        # hop's consumers — or the caller's final aggregate — run the
-        # materializing job; the re-execution bound is cache-based
-        # (persist blocks), not a hard checkpoint cut — see
-        # pagerank_fixed's docstring
-        reach = (
-            reach.unionByName(expanded).distinct().localCheckpoint(eager=False)
-        )
+        reach = reach.unionByName(expanded).distinct().localCheckpoint()
     return reach.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("n_reachable")
     )

@@ -1137,13 +1137,8 @@ def ivf_topk(
             # measured 2.4 s → 0.6 s per materialization at sf0.1. This
             # is the in-operator form of "persist the centroids as an
             # index artifact"; callers with a real artifact store use
-            # `ivf_build_index` + `centroids=` instead. LAZY: the plan
-            # cut is identical, but the k-row state materializes inside
-            # the query's own action instead of a separate blocking
-            # job; the Lloyd chain's shuffle stages are shared by RDD
-            # identity, so the two assignment branches still compute
-            # it once.
-            centroids = centroids.localCheckpoint(eager=False)
+            # `ivf_build_index` + `centroids=` instead.
+            centroids = centroids.localCheckpoint()
     assign = _cell_assigner(centroids)
 
     c = assign(
@@ -1516,7 +1511,7 @@ def pq_topk(
         state = pq_codebooks(
             corpus, m=m, ks=ks, iters=iters,
             id_col=id_col, vec_col=vec_col, dim=dim,
-        ).localCheckpoint(eager=False)  # lazy: see ivf_topk note
+        ).localCheckpoint()
 
     encoded = (
         fan_out(corpus)
@@ -1597,7 +1592,7 @@ def ivfpq_topk(
         state = pq_codebooks(
             corpus, m=m, ks=ks, iters=iters,
             id_col=id_col, vec_col=vec_col, dim=dim,
-        ).localCheckpoint(eager=False)  # lazy: see ivf_topk note
+        ).localCheckpoint()
     enc = (
         assign(
             fan_out(corpus).select(
@@ -1716,10 +1711,9 @@ def connected_components(
     `checkpointing.materialize`: localCheckpoint by default, reliable
     checkpoint into `checkpoint_dir` on a cluster). Convergence is
     detected with a count of changed labels — checked every SECOND
-    round (round 12, guide §5: the count is the only driver action in
-    the loop, and a propagation round applied at fixpoint is a no-op,
-    so checking after pairs of rounds halves the barrier count at the
-    cost of at most one idempotent extra round of tiny compute). The
+    round (a propagation round applied at fixpoint is a no-op, so
+    checking after pairs of rounds halves the count jobs at the cost
+    of at most one idempotent extra round of tiny compute). The
     symmetrized edge relation is checkpointed once — callers that
     pass an unmaterialized `pairs` (an LSH-verify tail) would
     otherwise re-derive it in every round of the loop.
@@ -1731,12 +1725,11 @@ def connected_components(
             pairs.selectExpr("id_b AS src", "id_a AS dst")
         ),
         checkpoint_dir,
-        eager=False,
     )
-    labels = materialize(
-        vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("label")),
-        checkpoint_dir,
-        eager=False,
+    # not cut: a projection of `vertices` that only round 1 reads, and
+    # round 1's output is cut
+    labels = vertices.select(
+        F.col(id_col).alias("v"), F.col(id_col).alias("label")
     )
 
     def _round(labels: DataFrame) -> DataFrame:
@@ -1759,9 +1752,7 @@ def connected_components(
             F.coalesce("nbr_label", "label"),
             F.coalesce("_jl", "label"),
         )
-        # lazy checkpoint: truncates the plan (fresh exprIds for the
-        # next round's self-joins) with NO driver job — only the
-        # convergence count below is an action
+        # the cut gives the next round's self-joins fresh exprIds
         return materialize(
             labels.join(nbr_min, labels["v"] == nbr_min["src"], "left")
             .join(jump, F.col("label") == jump["_jv"], "left")
@@ -1771,7 +1762,6 @@ def connected_components(
                 (best < F.col("label")).alias("_changed"),
             ),
             checkpoint_dir,
-            eager=False,
         )
 
     converged = False
@@ -1781,9 +1771,6 @@ def connected_components(
         for _ in range(min(2, max_iter - done)):
             new_labels = _round(new_labels.drop("_changed"))
             done += 1
-        # ONE job per check: the count materializes this pair of
-        # rounds' checkpoints (and, first time through, the edge and
-        # label-init checkpoints) as a side effect
         changed = new_labels.filter(F.col("_changed")).count()
         labels = new_labels.drop("_changed")
         if changed == 0:
@@ -2259,10 +2246,9 @@ def sq_topk(
     is small; see `ann_sq_recall` for the measured number."""
     from pyspark.sql import Window
 
-    # lazy checkpoint: the one-row bounds aggregate feeds the encode
-    # projection AND the reconstruction broadcast — one corpus pass,
-    # no blocking driver job
-    bounds = sq_bounds(corpus, dim, vec_col).localCheckpoint(eager=False)
+    # the one-row bounds aggregate feeds the encode projection AND
+    # the reconstruction broadcast — cut it so the corpus pass runs once
+    bounds = sq_bounds(corpus, dim, vec_col).localCheckpoint()
     codes = sq_encode(corpus, bounds, id_col, vec_col)
     recon = (
         fan_out(codes)
@@ -2416,7 +2402,7 @@ def ivfsq_topk(
         id_col=id_col,
         vec_col=vec_col,
         dim=dim,
-    ).localCheckpoint(eager=False)  # lazy: see ivf_topk note
+    ).localCheckpoint()
     bounds = sq_bounds(corpus, dim, vec_col)
     assign = _cell_assigner(cents)
     cells = assign(
@@ -2881,18 +2867,15 @@ def covariance_top_eigen(
         tri.filter(F.col("i") != F.col("j")).select(
             F.col("j").alias("i"), F.col("i").alias("j"), "cov"
         )
-        # lazy (round 12): the d²-cell sketch is consumed by the v
-        # init and all `iters` matvecs, every one inside the caller's
-        # single action — the corpus-sized covariance pass runs once
-        # with no separate blocking driver job
-    ).localCheckpoint(eager=False)
+        # the d²-cell sketch feeds the v init and all `iters` matvecs —
+        # cut it so the corpus-sized covariance pass runs once
+    ).localCheckpoint()
     v = (
         full.select(F.col("i").alias("d"))
         .distinct()
         .select("d", F.lit(1.0 / _math.sqrt(dim)).alias("x"))
     )
-    nrm = None
-    for _ in range(iters):
+    for it in range(iters):
         y = (
             full.join(F.broadcast(v), full.j == v.d)
             .groupBy("i")
@@ -2901,19 +2884,17 @@ def covariance_top_eigen(
         nrm = y.agg(
             F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("_nrm")
         )
-        v = (
-            y.crossJoin(F.broadcast(nrm))
-            .select(
-                F.col("i").alias("d"),
-                (F.col("y") / F.col("_nrm")).alias("x"),
-            )
-            # lazy lineage cut (pagerank_fixed policy): the RDD
-            # materializes inside the caller's single action instead
-            # of one blocking driver job per iteration (8 barriers on
-            # a 4096-row sketch relation); re-execution bound is
-            # cache-based — see pagerank_fixed's docstring
-            .localCheckpoint(eager=False)
+        # the iterate carries its norm, so the final eigenvalue is read
+        # from the last cut instead of re-deriving the last matvec
+        v = y.crossJoin(F.broadcast(nrm)).select(
+            F.col("i").alias("d"),
+            (F.col("y") / F.col("_nrm")).alias("x"),
+            "_nrm",
         )
+        # cut every second iterate: each cut is one driver job on a
+        # d-row relation, and the plan stays at most two matvecs deep
+        if it % 2:
+            v = v.localCheckpoint()
     # NOT F.signum: signum(0.0) = 0.0 would zero EVERY loading in the
     # degenerate all-zero-covariance case, while the DuckDB oracle's
     # CASE WHEN x < 0 THEN -1 ELSE 1 yields +1 — match the oracle.
@@ -2928,7 +2909,6 @@ def covariance_top_eigen(
     )
     return (
         v.crossJoin(F.broadcast(sign))
-        .crossJoin(F.broadcast(nrm))
         .select(
             F.col("d").cast("int").alias("dim"),
             (F.round(F.col("x") * F.col("_s"), round_to) + F.lit(0.0)).alias(
@@ -2969,10 +2949,8 @@ def kmeans_health(
     # the assignment broadcast); without a checkpoint each would re-run
     # the whole Lloyd chain over the corpus — checkpoint the single row
     # so the iterations execute once (measured ~2x on the health
-    # query). Lazy: the cut is identical, the training materializes
-    # inside the query's own action (broadcastTimeout raised in
-    # session config covers the broadcast-future path)
-    state = state.localCheckpoint(eager=False)
+    # query)
+    state = state.localCheckpoint()
     cents = state.select(F.posexplode("_cs").alias("cid", "cvec")).select(
         F.col("cid").cast("long").alias("cluster"), "cvec"
     )

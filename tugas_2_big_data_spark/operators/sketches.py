@@ -224,7 +224,7 @@ def count_min_heavy(
         F.count(F.lit(1)).alias("cnt")
     )
     if materialize:
-        items = items.localCheckpoint(eager=True)
+        items = items.localCheckpoint()
     counters = count_min_counters(items, depth, width)
     probes = items.orderBy(F.desc("cnt"), "item").limit(top_n)
     probe_pos = probes.select(

@@ -726,14 +726,11 @@ def bpe_merges(
             F.trim(F.regexp_replace("word", "(.)", r"$1 ")).alias("sym"),
         )
     )
-    # LAZY lineage cut: each round's best-pair job (the eager
-    # materialize below) computes the previous round's vocab and
-    # populates its checkpoint as a side effect — one scheduler
-    # barrier per round instead of two; the final round's unconsumed
-    # vocab never materializes at all
-    vocab = materialize(vocab, checkpoint_dir, eager=False)
     merge_frames = []
     for rnd in range(1, n_merges + 1):
+        # cut at the top of the round, so the last round's rewritten
+        # vocab, which nothing reads, is never materialized
+        vocab = materialize(vocab, checkpoint_dir)
         syms = vocab.select(
             "wc", F.split("sym", " ").alias("_s")
         ).filter(F.size("_s") >= 2)
@@ -782,7 +779,6 @@ def bpe_merges(
                 ).alias("sym"),
             )
         )
-        vocab = materialize(vocab, checkpoint_dir, eager=False)
     if not merge_frames:
         return df.sparkSession.createDataFrame(
             [],

@@ -67,7 +67,7 @@ def clean_corpus(
     # would materialize the semi-join stages early)
     sets = dedup.shingle_sets(
         survivors, text_col, id_col, widen=False
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8, id_col=id_col)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4, id_col=id_col)
     pairs = dedup.jaccard_verify_sets(
@@ -141,9 +141,7 @@ def span_clean_corpus(
     survivors = (
         fp.join(keep_exact, [id_col, "_fp"], "left_semi")
         .select(id_col, text_col)
-        # lazy: the span finder's and the re-tokenizer's shared scan
-        # materializes inside the query's own action
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     return dedup.excise_repeated_spans(
         survivors, text_col, id_col, k=k, keep="first"

@@ -182,9 +182,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist(DISK_ONLY) or a reliable checkpoint (localCheckpoint dies
     # with its executor). Only shuffles left: the LSH band self-join
     # and the two verify lookups.
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     return dedup.jaccard_verify_sets(sets, cand, threshold=0.5)
@@ -229,15 +227,13 @@ def dedup_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # LAZY checkpoints (round 12): same plan truncation — the gate
-    # still composes over LogicalRDD scans, keeping the super-linear
-    # fused plan away — but all three states materialize inside the
-    # query's single action instead of three blocking driver jobs
-    seen_sets = dedup.shingle_sets(docs).localCheckpoint(eager=False)
+    # the gate composes over the three cut states' LogicalRDD scans,
+    # keeping the super-linear fused plan away
+    seen_sets = dedup.shingle_sets(docs).localCheckpoint()
     seen_bands = dedup.lsh_band_keys(
         dedup.minhash_signatures_from_sets(seen_sets)
-    ).localCheckpoint(eager=False)
-    batch_sets = dedup.shingle_sets(batch).localCheckpoint(eager=False)
+    ).localCheckpoint()
+    batch_sets = dedup.shingle_sets(batch).localCheckpoint()
     return dedup.incremental_near_dup(
         batch_sets, seen_sets, threshold=0.5, seen_bands=seen_bands
     )
@@ -392,12 +388,8 @@ def dedup_incremental_near_dup_two_batches(
     union (band keys re-derived map-only from the accepted docs'
     shingle sets) — per-batch cost independent of state size.
 
-    Job shape (guide §5, round 12): every state checkpoint is LAZY —
-    plan truncation is identical to the eager form, but the whole
-    two-batch loop now runs as ONE driver job (the final action
-    materializes gate₁, the accepted set, the merged state and gate₂
-    in dependency order) instead of five; and the seen band state is
-    checkpointed so its corpus-sized minhash derivation happens once,
+    Job shape: every state is cut where it is taken, and the seen
+    band state is cut so its corpus-sized minhash derivation happens once,
     shared by gate₁ and the merged state, instead of once per
     consumer (the r11 single-batch fix, INCR_NEARDUP_STAGES.json,
     applied to the loop form)."""
@@ -427,11 +419,11 @@ def dedup_incremental_near_dup_two_batches(
             )
         )
     )
-    seen_sets = dedup.shingle_sets(docs).localCheckpoint(eager=False)
+    seen_sets = dedup.shingle_sets(docs).localCheckpoint()
     seen_bands = dedup.lsh_band_keys(
         dedup.minhash_signatures_from_sets(seen_sets), 8, 4
-    ).localCheckpoint(eager=False)
-    b1_sets = dedup.shingle_sets(b1).localCheckpoint(eager=False)
+    ).localCheckpoint()
+    b1_sets = dedup.shingle_sets(b1).localCheckpoint()
     m1 = dedup.incremental_near_dup(
         b1_sets, seen_sets, threshold=0.5, seen_bands=seen_bands
     )
@@ -439,12 +431,12 @@ def dedup_incremental_near_dup_two_batches(
         m1.select(F.col("new_id").alias("doc_id")).distinct(),
         "doc_id",
         "left_anti",
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     acc1_sets = b1_sets.join(acc1.select("doc_id"), "doc_id", "left_semi")
     bands1, sets1 = dedup.merge_near_dup_state(
         seen_bands, seen_sets, acc1_sets
     )
-    b2_sets = dedup.shingle_sets(b2).localCheckpoint(eager=False)
+    b2_sets = dedup.shingle_sets(b2).localCheckpoint()
     m2 = dedup.incremental_near_dup(
         b2_sets, sets1, threshold=0.5, seen_bands=bands1
     )
@@ -526,9 +518,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula's asserted trade with a number measured on this corpus.
     `dedup_incremental_near_dup` and the LSH pair family inherit
     whatever this reports at their operating threshold (0.5)."""
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     return dedup.lsh_candidate_recall(sets)
 
 # shingle relation under the 60-bit portable hash — the oracle twin of
@@ -885,9 +875,7 @@ def dedup_text_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability. The one-hop `near_dup_canonical` inside
     pipeline_clean_corpus is the cheap approximation; this is the
     exact clustering."""
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = dedup.jaccard_verify_sets(sets, cand, threshold=0.5).select(
@@ -1712,13 +1700,13 @@ def ann_incremental_two_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    state0 = similarity.lsh_bucket_state(emb).localCheckpoint(eager=False)
+    state0 = similarity.lsh_bucket_state(emb).localCheckpoint()
     m1 = similarity.incremental_embedding_near_dup(b1, state0, threshold=0.999)
     acc1 = b1.join(
         m1.select(F.col("new_id").alias("vec_id")).distinct(),
         "vec_id",
         "left_anti",
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     state1 = similarity.merge_bucket_state(state0, acc1)
     m2 = similarity.incremental_embedding_near_dup(b2, state1, threshold=0.999)
     acc2 = b2.join(
@@ -2341,8 +2329,8 @@ def ann_incremental_add_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.cosine_topk(emb, q5, k=5)
         .select("query_id", "nbr_id")
         # three consumers (n_exact + two variant tallies) — one corpus
-        # pass, no extra driver job (see _spark_recall_over)
-        .localCheckpoint(eager=False)
+        # pass
+        .localCheckpoint()
     )
     froz = similarity.ivf_topk_from_index(
         spark, p12, q5, nprobe=2, k=5
@@ -2497,8 +2485,10 @@ def ann_ivf_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "invfile",
         lambda p: similarity.ivf_build_index(emb, p, meta_cols=("label",)),
     )
-    exact = similarity.cosine_topk(allowed, q5, k=5).select(
-        "query_id", "nbr_id"
+    exact = (
+        similarity.cosine_topk(allowed, q5, k=5)
+        .select("query_id", "nbr_id")
+        .localCheckpoint()
     )
     approx = similarity.ivf_topk_from_index(
         spark, path, q5, nprobe=2, k=5,
@@ -2542,9 +2532,8 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         similarity.cosine_topk(emb, q5, k=5)
         .select("query_id", "nbr_id")
-        # two consumers (count + hits semi-join) — one corpus pass,
-        # no extra driver job (see _spark_recall_over)
-        .localCheckpoint(eager=False)
+        # two consumers (count + hits semi-join) — one corpus pass
+        .localCheckpoint()
     )
     approx = similarity.ivf_topk(emb, q5, nprobe=2, k=5).select(
         "query_id", "nbr_id"
@@ -2702,7 +2691,7 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = (
         similarity.cosine_topk(emb, q5, k=5)
         .select("query_id", "nbr_id")
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     n_ex = ex.agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
     hits = (
@@ -3000,11 +2989,10 @@ FROM n_ex n JOIN hits h ON h.query_id = n.query_id
 
 
 def _spark_recall_over(exact: DataFrame, approx: DataFrame) -> DataFrame:
-    # the exact-truth relation (a full-corpus scoring pass, ≤ k rows
-    # per query) feeds both aggregates below — checkpoint it lazily so
-    # the corpus pass runs once inside the query's action instead of
-    # once per consumer branch
-    exact = exact.localCheckpoint(eager=False)
+    """Per-query recall of `approx` against `exact`. The exact-truth
+    relation (a full-corpus scoring pass, ≤ k rows per query) feeds
+    both aggregates below, so callers pass it already cut — once per
+    query, however many recalls share it."""
     n_ex = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
     hits = (
         exact.join(approx, ["query_id", "nbr_id"], "left_semi")
@@ -3036,7 +3024,11 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_artifact(
         spark, path, "codes", lambda p: similarity.pq_build_index(emb, p)
     )
-    exact = similarity.cosine_topk(emb, q5, k=5).select("query_id", "nbr_id")
+    exact = (
+        similarity.cosine_topk(emb, q5, k=5)
+        .select("query_id", "nbr_id")
+        .localCheckpoint()
+    )
     approx = similarity.pq_topk_from_index(spark, path, q5, k=5).select(
         "query_id", "nbr_id"
     )
@@ -3130,7 +3122,11 @@ def ann_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_artifact(
         spark, path, "codes", lambda p: similarity.sq_build_index(emb, p)
     )
-    exact = similarity.cosine_topk(emb, q5, k=5).select("query_id", "nbr_id")
+    exact = (
+        similarity.cosine_topk(emb, q5, k=5)
+        .select("query_id", "nbr_id")
+        .localCheckpoint()
+    )
     approx = similarity.sq_topk_from_index(spark, path, q5, k=5).select(
         "query_id", "nbr_id"
     )
@@ -3239,7 +3235,11 @@ def ann_ivfsq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_artifact(
         spark, path, "codes", lambda p: similarity.ivfsq_build_index(emb, p)
     )
-    exact = similarity.cosine_topk(emb, q5, k=5).select("query_id", "nbr_id")
+    exact = (
+        similarity.cosine_topk(emb, q5, k=5)
+        .select("query_id", "nbr_id")
+        .localCheckpoint()
+    )
     approx = similarity.ivfsq_topk_from_index(
         spark, path, q5, nprobe=2, k=5
     ).select("query_id", "nbr_id")
@@ -3303,8 +3303,10 @@ def ann_ivfsq_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q5 = emb.filter(F.col("vec_id") < 5)
     allowed = emb.filter(F.col("label").isin(1, 3, 5))
     path = _ivfsq_meta_artifact(spark, sf_dir)
-    exact = similarity.cosine_topk(allowed, q5, k=5).select(
-        "query_id", "nbr_id"
+    exact = (
+        similarity.cosine_topk(allowed, q5, k=5)
+        .select("query_id", "nbr_id")
+        .localCheckpoint()
     )
     approx = similarity.ivfsq_topk_from_index(
         spark, path, q5, nprobe=2, k=5,
@@ -3382,7 +3384,11 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_artifact(
         spark, path, "codes", lambda p: similarity.ivfpq_build_index(emb, p)
     )
-    exact = similarity.cosine_topk(emb, q5, k=5).select("query_id", "nbr_id")
+    exact = (
+        similarity.cosine_topk(emb, q5, k=5)
+        .select("query_id", "nbr_id")
+        .localCheckpoint()
+    )
     adc = similarity.ivfpq_topk_from_index(
         spark, path, q5, nprobe=2, k=5
     ).select("query_id", "nbr_id")
@@ -3520,7 +3526,11 @@ def ann_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "codes",
         lambda p: similarity.ivfpq_residual_build_index(emb, p),
     )
-    exact = similarity.cosine_topk(emb, q5, k=5).select("query_id", "nbr_id")
+    exact = (
+        similarity.cosine_topk(emb, q5, k=5)
+        .select("query_id", "nbr_id")
+        .localCheckpoint()
+    )
     approx = similarity.ivfpq_residual_topk_from_index(
         spark, path, q5, nprobe=2, k=5
     ).select("query_id", "nbr_id")
@@ -4599,9 +4609,7 @@ def dedup_incremental_two_batches(
         )
     )
     state0 = dedup.fingerprint_groups(docs).select("fp")
-    acc1 = dedup.incremental_new_docs(b1, state0).localCheckpoint(
-        eager=False
-    )
+    acc1 = dedup.incremental_new_docs(b1, state0).localCheckpoint()
     state1 = dedup.merge_fingerprint_state(state0, acc1)
     acc2 = dedup.incremental_new_docs(b2, state1)
     return acc1.select(
@@ -4795,7 +4803,7 @@ def dedup_incremental_bloom_two_batches(
     )
     r1 = dedup.route_batch_bloom(
         b1, bloom0, state0, n_blocks=_BLOOM_NB, g=_BLOOM_G
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     acc1_fps = (
         b1.join(r1.filter(F.col("route") != "dup").select("doc_id"), "doc_id")
         .select(F.md5(dedup.normalized("text")).alias("fp"))
@@ -4877,7 +4885,7 @@ def dedup_incremental_bloom_prebuilt(
     )
     r1 = dedup.route_batch_bloom(
         b1, bloom0, state0, n_blocks=_BLOOM_NB, g=_BLOOM_G
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     acc1_fps = (
         b1.join(r1.filter(F.col("route") != "dup").select("doc_id"), "doc_id")
         .select(F.md5(dedup.normalized("text")).alias("fp"))
@@ -5858,7 +5866,7 @@ def curate_near_dup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_lsh_pairs), both edge directions, one domination
     anti-join."""
     c = corpus(spark, sf_dir)
-    sets = dedup.shingle_sets(c).localCheckpoint(eager=False)
+    sets = dedup.shingle_sets(c).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = dedup.jaccard_verify_sets(sets, cand, threshold=0.5)
@@ -6367,9 +6375,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected_components)."""
     from tugas_2_big_data_spark.operators import graph
 
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = dedup.jaccard_verify_sets(sets, cand, threshold=0.5).select(
@@ -6458,9 +6464,7 @@ def graph_component_representatives(
     closure."""
     from tugas_2_big_data_spark.operators import graph
 
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = (
@@ -6523,18 +6527,13 @@ def graph_component_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     density pass is two component-keyed aggregates + a map-sized join."""
     from tugas_2_big_data_spark.operators import graph
 
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = (
         dedup.jaccard_verify_sets(sets, cand, threshold=0.5)
         .select("id_a", "id_b")
-        # lazy: the closure loop's first convergence count materializes
-        # it; single-threaded consumers only (the threaded queries keep
-        # their pairs checkpoint eager)
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     verts = graph.symmetrize(pairs).select(F.col("src").alias("v")).distinct()
     comps = similarity.connected_components(verts, pairs, id_col="v")
@@ -6561,7 +6560,7 @@ def curate_near_dup_keep_central(
     from tugas_2_big_data_spark.operators import graph
 
     c = corpus(spark, sf_dir)
-    sets = dedup.shingle_sets(c).localCheckpoint(eager=False)
+    sets = dedup.shingle_sets(c).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = (
@@ -6689,9 +6688,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth-bounded recursive CTE."""
     from tugas_2_big_data_spark.operators import graph
 
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = dedup.jaccard_verify_sets(sets, cand, threshold=0.5).select(
@@ -6830,9 +6827,7 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of doc_id. Reuses the verified LSH pair chain and the
     map-only split assignment — the pair relation is near-dup-sparse,
     so the two split joins are broadcast-sized at any corpus scale."""
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = dedup.jaccard_verify_sets(sets, cand, threshold=0.5).select(
@@ -6918,18 +6913,13 @@ def split_grouped_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson — never re-run LSH per consumer); the closure is iterative
     min-label propagation, the split assignment one component-map join
     + map-only bucketing."""
-    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    sets = dedup.shingle_sets(corpus(spark, sf_dir)).localCheckpoint()
     sig = dedup.minhash_signatures_from_sets(sets, k=8)
     cand = dedup.lsh_candidate_pairs(sig, k=8, bands=4)
     pairs = (
         dedup.jaccard_verify_sets(sets, cand, threshold=0.5)
         .select("id_a", "id_b")
-        # lazy: the closure loop's first convergence count materializes
-        # it; single-threaded consumers only (the threaded queries keep
-        # their pairs checkpoint eager)
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     verts = corpus(spark, sf_dir).select("doc_id")
     comps = similarity.connected_components(verts, pairs, id_col="doc_id")

@@ -12,11 +12,52 @@ coalescing/skew; shuffle partitions should be ~2-3× total cores.
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+# Runtime confs the query RESULTS depend on. Every registered query's
+# oracle assumes them, so a session that refuses one must fail instead
+# of returning values that silently differ from the oracle.
+SEMANTIC_CONF: dict[str, str] = {
+    # period keys are date_format strings — UTC makes them comparable
+    "spark.sql.session.timeZone": "UTC",
+    # reference semantics are Spark-3 non-ANSI (cast → NULL, no
+    # arithmetic exceptions); Spark 4 defaults ANSI on
+    "spark.sql.ansi.enabled": "false",
+}
+
+# Runtime confs that only move speed. Best effort on a session this
+# package did not build: a refusal is logged and the query runs on.
+PERF_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # AQE coalesces shuffle outputs below minPartitionSize (default
+    # 1 MB). Kilobyte-scale intermediates with compute-heavy
+    # projections above them (HOF folds, Arrow UDFs) collapse to ONE
+    # task and serialize on a single core; 64 KB keeps such stages
+    # wide while still folding away empty/trivial partitions. At
+    # cluster scale partitions are MBs+ and this setting is inert.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # InferFiltersFromGenerate rewrites explode(expr) into
+    # size(expr) > 0 AND ... filters and pushes them below the
+    # projection — substituting the FULL generator expression into
+    # the filter. For computed arrays (shingles, band structs,
+    # probe lists) that re-evaluates an expensive HOF chain once
+    # per filter check on the narrow pre-shuffle stage: the
+    # exhaustive n-gram Jaccard measured 10.5 s -> 2.9 s at sf0.1
+    # with the rule off. Explode already skips empty arrays, so the
+    # rule is a pure pre-prune optimization we never benefit from.
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
 
 
 def get_spark(
@@ -31,43 +72,9 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalesces shuffle outputs below minPartitionSize (default
-        # 1 MB). Kilobyte-scale intermediates with compute-heavy
-        # projections above them (HOF folds, Arrow UDFs) collapse to ONE
-        # task and serialize on a single core; 64 KB keeps such stages
-        # wide while still folding away empty/trivial partitions. At
-        # cluster scale partitions are MBs+ and this setting is inert.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        # InferFiltersFromGenerate rewrites explode(expr) into
-        # size(expr) > 0 AND ... filters and pushes them below the
-        # projection — substituting the FULL generator expression into
-        # the filter. For computed arrays (shingles, band structs,
-        # probe lists) that re-evaluates an expensive HOF chain once
-        # per filter check on the narrow pre-shuffle stage: the
-        # exhaustive n-gram Jaccard measured 10.5 s -> 2.9 s at sf0.1
-        # with the rule off. Explode already skips empty arrays, so the
-        # rule is a pure pre-prune optimization we never benefit from.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Trained ANN state (centroids/codebooks) is checkpointed lazily
-        # (eager=False saves one blocking driver job per query) and is
-        # consumed via crossJoin(broadcast(...)), so the whole multi-job
-        # training loop runs inside the broadcast-exchange future and
-        # counts against broadcastTimeout. The default 300 s would fail
-        # a >5 min train at the 100 TB design point; the state itself is
-        # k·dim doubles (KBs), so a long timeout is safe.
-        .config("spark.sql.broadcastTimeout", "36000")
         # The default JVM code cache (240 MB) overflows after a few dozen
         # wide whole-stage-codegen + higher-order-function queries; the
         # JIT then silently stops compiling and hot expression loops run
@@ -78,6 +85,7 @@ def get_spark(
         .config(
             "spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=2g"
         )
+        .config(map={**SEMANTIC_CONF, **PERF_CONF})
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -85,33 +93,27 @@ def get_spark(
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable tuning to an externally-provided session.
+    """Apply the runtime confs to an externally-provided session.
 
     The verification driver supplies its own SparkSession; these confs are
     runtime-mutable so we can still pin the semantics our plans rely on
-    (UTC timestamps for date_format grains, AQE, Arrow).
+    (UTC timestamps for date_format grains, non-ANSI casts) and the
+    performance settings (AQE, Arrow). A semantic conf that cannot be
+    set, or reads back different, raises; a perf conf is best effort.
     """
-    conf = {
-        "spark.sql.session.timeZone": "UTC",
-        # reference semantics are Spark-3 non-ANSI (cast → NULL, no
-        # arithmetic exceptions); Spark 4 defaults ANSI on
-        "spark.sql.ansi.enabled": "false",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-        "spark.sql.optimizer.excludedRules":
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # lazy ANN training checkpoints materialize inside broadcast
-        # futures — see get_spark for the full rationale
-        "spark.sql.broadcastTimeout": "36000",
-    }
-    for k, v in conf.items():
+    for k, v in SEMANTIC_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-runtime conf on this build — keep going
+            got = spark.conf.get(k)
+        except Exception as ex:
+            raise RuntimeError(f"session refused {k}={v}: {ex}") from ex
+        if got != v:
+            raise RuntimeError(f"session holds {k}={got}, queries need {v}")
+    for k, v in PERF_CONF.items():
+        try:
+            spark.conf.set(k, v)
+        except Exception as ex:  # noqa: BLE001 — speed only, never values
+            _log.warning("perf conf %s=%s not applied: %s", k, v, ex)
     ship_package(spark)
     return spark
 

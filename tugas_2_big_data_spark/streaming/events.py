@@ -292,7 +292,12 @@ def run_to_memory(
 ) -> DataFrame:
     """Drive a streaming frame to completion against the in-memory sink
     (test/smoke harness — processAllAvailable drains the file source
-    synchronously) and return the materialized result table."""
+    synchronously) and return the materialized result table.
+
+    The sink's temp view is dropped once the frame is built: the frame
+    holds the sink itself, while the view name would keep the sink's
+    rows in driver memory for the life of the session."""
+    spark = stream_df.sparkSession
     q = (
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
@@ -303,7 +308,9 @@ def run_to_memory(
         q.processAllAvailable()
     finally:
         q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
+    out = spark.sql(f"SELECT * FROM {name}")
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def enrich_with_static_dim(
