@@ -17,7 +17,7 @@ SF_ORACLE = "/root/testdata/sf0.01"  # driver's correctness tier
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="tests", master="local[8]")
     yield s
     s.stop()
 

@@ -6,7 +6,8 @@
 - no package code raises ``spark.sql.broadcastTimeout`` (no query may
   depend on a session conf it does not own);
 - ``tune_session`` raises when a semantic conf cannot be applied, and
-  keeps going when a perf conf cannot.
+  keeps going when a perf conf cannot;
+- ``tune_session`` sizes the shuffle width to the session's cores.
 """
 
 from __future__ import annotations
@@ -122,3 +123,10 @@ def test_tune_session_perf_conf_is_best_effort(caplog):
     assert refused not in stub.conf.values
     assert stub.conf.values["spark.sql.session.timeZone"] == "UTC"
     assert refused in caplog.text
+
+
+def test_tune_session_sets_shuffle_width_to_default_parallelism():
+    stub = _StubSession()
+    stub.sparkContext.defaultParallelism = 3
+    session.tune_session(stub)
+    assert stub.conf.values["spark.sql.shuffle.partitions"] == "3"

@@ -862,7 +862,7 @@ def test_streaming_dq_durable_zero_batches_raises_explicitly(spark, tmp_path):
 
 
 def test_streaming_er_durable_ignores_foreign_stale_partitions(spark, tmp_path):
-    """ADVICE r9: a reused state_dir holding batch=N partitions from an
+    """ADVICE r9: a reused state_dir holding batch-N state from an
     earlier ABORTED run that drained MORE batches than this stream must
     not leak those rows into the drained relation — the final fold is
     scoped to the batch ids THIS checkpoint committed."""
@@ -878,7 +878,7 @@ def test_streaming_er_durable_ignores_foreign_stale_partitions(spark, tmp_path):
     # a foreign aborted run left a stale high-numbered partition
     spark.createDataFrame(
         [(999999, 999999, 0)], "d_id long, matched_key long, dist long"
-    ).write.parquet(f"{state}/batch=7")
+    ).write.parquet(se._BatchStore(state).path("matches", 7))
 
     _add_batch_file(dirty, batches, 1)
     out = se.run_streaming_er(
@@ -917,14 +917,14 @@ def test_streaming_dq_durable_ignores_foreign_stale_partitions(spark, tmp_path):
 
     checks = _orders_dq_checks()
     agg_names = [n for n, _ in checks if n != "pk_unique"]
-    # foreign run's stale batch=9: huge counters + a colliding key
+    # foreign run's stale batch 9: huge counters + a colliding key
     spark.createDataFrame(
         [tuple([50] * len(agg_names) + [50, 50])],
         ", ".join(f"{n} long" for n in agg_names)
         + ", _nonnull_keys long, _fk_orphans long",
-    ).write.parquet(f"{state}/counters/batch=9")
+    ).write.parquet(se._BatchStore(state).path("counters", 9))
     spark.createDataFrame([(1,)], "k long").write.parquet(
-        f"{state}/keys/batch=9"
+        se._BatchStore(state).path("keys", 9)
     )
 
     _add_batch_file(df, batches, 1)
@@ -972,7 +972,7 @@ def test_streaming_er_durable_empty_batch_claims_same_id_footprint(
     spark, tmp_path
 ):
     """ADVICE r10: an EMPTY micro-batch is still committed, so its id
-    enters the final fold's scope — a same-id batch= dir left by a
+    enters the final fold's scope — a same-id batch dir left by a
     foreign run in a reused state_dir must be overwritten (claimed),
     not folded into the result through the early return."""
     from tugas_2_big_data_spark import queries as q  # noqa: F401
@@ -984,11 +984,11 @@ def test_streaming_er_durable_empty_batch_claims_same_id_footprint(
     batches = str(tmp_path / "batches")
     state = str(tmp_path / "state")
 
-    # foreign aborted run left rows at batch=1 — the id our EMPTY
+    # foreign aborted run left rows at batch 1 — the id our EMPTY
     # second file will be committed under
     spark.createDataFrame(
         [(999999, 999999, 0)], "d_id long, matched_key long, dist long"
-    ).write.parquet(f"{state}/batch=1")
+    ).write.parquet(se._BatchStore(state).path("matches", 1))
 
     _add_batch_file(dirty, batches, 1)          # -> batch id 0
     _add_batch_file(dirty.limit(0), batches, 2)  # -> batch id 1, EMPTY
@@ -1028,15 +1028,15 @@ def test_streaming_dq_durable_empty_batch_claims_same_id_footprint(
 
     checks = _orders_dq_checks()
     agg_names = [n for n, _ in checks if n != "pk_unique"]
-    # foreign run's batch=1: huge counters + a colliding key — exactly
+    # foreign run's batch 1: huge counters + a colliding key — exactly
     # the id our empty second file is committed under
     spark.createDataFrame(
         [tuple([50] * len(agg_names) + [50, 50])],
         ", ".join(f"{n} long" for n in agg_names)
         + ", _nonnull_keys long, _fk_orphans long",
-    ).write.parquet(f"{state}/counters/batch=1")
+    ).write.parquet(se._BatchStore(state).path("counters", 1))
     spark.createDataFrame([(1,)], "k long").write.parquet(
-        f"{state}/keys/batch=1"
+        se._BatchStore(state).path("keys", 1)
     )
 
     _add_batch_file(df, batches, 1)          # -> batch id 0
@@ -1073,7 +1073,7 @@ def test_evolving_near_dup_durable_empty_batch_claims_same_id_footprint(
     # foreign accepted rows under the id our empty file commits as
     spark.createDataFrame(
         [(2, 999999)], "batch long, doc_id long"
-    ).write.parquet(f"{state}/accepted/b000001")
+    ).write.parquet(se._BatchStore(state).path("accepted", 1))
 
     _add_batch_file(b1, batches, 1)          # -> batch id 0
     _add_batch_file(b1.limit(0), batches, 2)  # -> batch id 1, EMPTY
@@ -1084,3 +1084,19 @@ def test_evolving_near_dup_durable_empty_batch_claims_same_id_footprint(
     got = sorted(map(tuple, out.collect()))
     assert (2, 999999) not in got
     assert got and all(b == 1 for b, _ in got)
+
+
+def test_scratch_dir_lives_under_the_spark_files_root(spark):
+    """Stream queries stage their batches, checkpoints and state here;
+    Spark deletes this root on stop(), so no work dir outlives the
+    session."""
+    import os
+
+    from pyspark import SparkFiles
+
+    from tugas_2_big_data_spark.session import scratch_dir
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    d = scratch_dir("tugas2_stream_test_")
+    assert os.path.isdir(d)
+    assert os.path.dirname(os.path.realpath(d)) == root

@@ -3,6 +3,7 @@ import json
 import math
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, "/root/repo")
 
@@ -18,6 +19,16 @@ TABLES = [
 # the external driver compares at sf0.01; override to certify the same
 # oracles at another tier (e.g. sf0.1 — 10x the driver's data)
 SF_DIR = os.environ.get("SPARK_GRAFT_DRIVE_SF_DIR", "/root/testdata/sf0.01")
+# per-query work dirs must not outlive the session; tugas2_ann_index is
+# a deliberate cross-session artifact cache and is not checked
+LEAK_PREFIXES = ("tugas2_stream_", "t2bd_fp_state_")
+
+
+def leak_candidates():
+    return {
+        n for n in os.listdir(tempfile.gettempdir())
+        if n.startswith(LEAK_PREFIXES)
+    }
 
 
 def norm(v):
@@ -52,6 +63,7 @@ def close(a, b):
 
 
 def main():
+    before = leak_candidates()
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -133,7 +145,12 @@ def main():
         with open(out, "w") as f:
             json.dump(report, f, indent=1, sort_keys=True)
         print(f"wrote {out}")
-    if failures:
+    spark.stop()
+    leaked = sorted(leak_candidates() - before)
+    print(f"leak check: {len(leaked)} new work dirs in {tempfile.gettempdir()}")
+    for n in leaked:
+        print(f"LEAK {n}")
+    if failures or leaked:
         sys.exit(1)
 
 

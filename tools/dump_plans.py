@@ -74,8 +74,7 @@ SHOWCASE = [
 
 
 def main() -> None:
-    spark = get_spark(app_name="dump_plans", master="local[4]",
-                      shuffle_partitions=4)
+    spark = get_spark(app_name="dump_plans", master="local[4]")
     reg = q.queries()
     print("# PLANS — formatted physical plans for flagship queries")
     print()

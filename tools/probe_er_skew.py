@@ -82,7 +82,7 @@ def balance(df) -> dict:
 
 
 def main() -> None:
-    spark = get_spark(app_name="er_skew_probe", shuffle_partitions=32)
+    spark = get_spark(app_name="er_skew_probe")
     dirty, base = fixture(spark)
     out = {
         "n_base": N_BASE,

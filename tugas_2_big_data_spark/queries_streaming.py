@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tugas_2_big_data_spark.queries import register
+from tugas_2_big_data_spark.session import scratch_dir
 from tugas_2_big_data_spark.streaming import events as se
 
 _COUNTER = itertools.count()
@@ -27,6 +28,15 @@ def _sink_name(prefix: str) -> str:
     # memory-sink table names are session-global; keep re-invocations
     # (driver retries, repeated tests) from colliding
     return f"{prefix}_{os.getpid()}_{next(_COUNTER)}"
+
+
+def _stage(prefix: str, batches: list[DataFrame]) -> str:
+    """A session-lived work dir holding ``batches`` as ingest files
+    under ``{work}/batches``; a drain keeps its checkpoint at
+    ``{work}/ckpt`` and its durable state at ``{work}/state``."""
+    work = scratch_dir(prefix)
+    se.write_ingest_batches(batches, f"{work}/batches")
+    return work
 
 
 _STREAM_TUMBLE_SQL = """
@@ -424,12 +434,32 @@ def _evolving_two_batch_fixture(spark: SparkSession, sf_dir: str):
     return b1, b2, seen_bands, seen_sets
 
 
+def _evolving_two_batches(
+    spark: SparkSession, sf_dir: str, durable: bool
+) -> DataFrame:
+    b1, b2, seen_bands, seen_sets = _evolving_two_batch_fixture(
+        spark, sf_dir
+    )
+    work = _stage("tugas2_stream_ingest_", [b1, b2])
+    return se.run_evolving_near_dup(
+        spark,
+        f"{work}/batches",
+        seen_bands,
+        seen_sets,
+        checkpoint_dir=f"{work}/ckpt",
+        state_dir=f"{work}/state" if durable else None,
+    )
+
+
+_INCR2_NEAR_DUP_SQL = _incr2_near_dup_sql()
+
+
 @register(
     "stream_incremental_two_batches",
     # the batch two-batch oracle: the streaming drain with per-batch
     # state merges must equal the batch check→merge→check composition
     # value-for-value — batch/stream parity for the EVOLVING loop
-    _incr2_near_dup_sql(),
+    _INCR2_NEAR_DUP_SQL,
 )
 def stream_incremental_two_batches(
     spark: SparkSession, sf_dir: str
@@ -444,51 +474,19 @@ def stream_incremental_two_batches(
     do. Same batch constructions and SAME ORACLE as
     `dedup_incremental_near_dup_two_batches`: the streaming loop is
     value-equal to the batch composition."""
-    import tempfile
-
-    b1, b2, seen_bands, seen_sets = _evolving_two_batch_fixture(
-        spark, sf_dir
-    )
-    work = tempfile.mkdtemp(prefix="tugas2_stream_ingest_")
-    se.write_ingest_batches([b1, b2], f"{work}/batches")
-    return se.run_evolving_near_dup(
-        spark,
-        f"{work}/batches",
-        seen_bands,
-        seen_sets,
-        checkpoint_dir=f"{work}/ckpt",
-    )
+    return _evolving_two_batches(spark, sf_dir, durable=False)
 
 
-@register("stream_incremental_two_batches_durable", _incr2_near_dup_sql())
+@register("stream_incremental_two_batches_durable", _INCR2_NEAR_DUP_SQL)
 def stream_incremental_two_batches_durable(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """stream_incremental_two_batches' CRASH-SAFE twin — the EVOLVING
-    near-dup loop drained through `state_dir`: each micro-batch's
-    accepted rows, shingle sets, and band keys persist as batch-id-
-    keyed overwrites, and every fold gates against the initial state
-    plus STRICTLY-EARLIER batch deltas (the strict inequality is what
-    makes a checkpoint replay correct: a re-delivered batch must not
-    LSH-collide with its own prior attempt). The hardest of the four
-    crash-safe drains because its state is both evolving AND
+    """stream_incremental_two_batches' CRASH-SAFE twin: the same
+    EVOLVING near-dup loop drained through `state_dir`. The hardest of
+    the crash-safe drains because its state is both evolving AND
     order-dependent; restart-equivalence chaos-tested in
     test_streaming.py. Shares the batch two-batch oracle verbatim."""
-    import tempfile
-
-    b1, b2, seen_bands, seen_sets = _evolving_two_batch_fixture(
-        spark, sf_dir
-    )
-    work = tempfile.mkdtemp(prefix="tugas2_stream_ingest_dur_")
-    se.write_ingest_batches([b1, b2], f"{work}/batches")
-    return se.run_evolving_near_dup(
-        spark,
-        f"{work}/batches",
-        seen_bands,
-        seen_sets,
-        checkpoint_dir=f"{work}/ckpt",
-        state_dir=f"{work}/state",
-    )
+    return _evolving_two_batches(spark, sf_dir, durable=True)
 
 
 def _stream_hll_sql() -> str:
@@ -518,11 +516,9 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned 0 by the oracle) is the batch/stream parity check, and the
     estimate is value-compared against the oracle's full replay of the
     sketch math."""
-    import tempfile
-
     from tugas_2_big_data_spark.operators import sketches
 
-    work = tempfile.mkdtemp(prefix="tugas2_stream_hll_")
+    work = scratch_dir("tugas2_stream_hll_")
     streamed = se.run_streaming_hll(
         spark,
         se.read_events_stream(spark, sf_dir),
@@ -560,7 +556,7 @@ def stream_ann_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming symmetry (every incremental loop now has a streaming
     form: exact dedup, LSH near-dup, embedding buckets, the HLL
     sketch, and the vector index). Batch 1 (even vec_ids) builds a
-    fresh IVF index into a per-run tempdir and freezes its quantizer;
+    fresh IVF index into a per-run work dir and freezes its quantizer;
     batch 2 (odd vec_ids) arrives as TWO micro-batch files, each
     folded in by `similarity.ivf_append_to_index` inside foreachBatch
     (streaming/events.run_streaming_ann_append). Serving after the
@@ -568,25 +564,22 @@ def stream_ann_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage-2 oracle: a frozen index that ignored the stream would miss
     every odd vector and hash-mismatch; appends that depended on the
     micro-batching would too."""
-    import tempfile
-
     from tugas_2_big_data_spark.operators import similarity
     from tugas_2_big_data_spark.sources.catalog import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
     b1 = emb.filter(F.col("vec_id") % 2 == 0)
     b2 = emb.filter(F.col("vec_id") % 2 == 1)
-    work = tempfile.mkdtemp(prefix="tugas2_stream_annadd_")
-    index_path = f"{work}/index"
-    similarity.ivf_build_index(b1, index_path)
     # two real micro-batches: odd halves split again by vec_id % 4
-    se.write_ingest_batches(
+    work = _stage(
+        "tugas2_stream_annadd_",
         [
             b2.filter(F.col("vec_id") % 4 == 1),
             b2.filter(F.col("vec_id") % 4 == 3),
         ],
-        f"{work}/batches",
     )
+    index_path = f"{work}/index"
+    similarity.ivf_build_index(b1, index_path)
     n = se.run_streaming_ann_append(
         spark, f"{work}/batches", index_path, f"{work}/ckpt"
     )
@@ -618,8 +611,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc_apply_changelog's oracle verbatim. Closes the streaming
     symmetry for the warehouse-maintenance loop (every incremental
     loop in this engine has both batch and streaming forms)."""
-    import tempfile
-
     from tugas_2_big_data_spark.sources.catalog import load_table
 
     o = load_table(spark, "orders", sf_dir)
@@ -636,13 +627,12 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.col("o_totalprice"),
     )
-    work = tempfile.mkdtemp(prefix="tugas2_stream_cdc_")
-    se.write_ingest_batches(
+    work = _stage(
+        "tugas2_stream_cdc_",
         [
             changelog.filter(F.col("o_orderkey") % 2 == 0),
             changelog.filter(F.col("o_orderkey") % 2 == 1),
         ],
-        f"{work}/batches",
     )
     final = se.run_streaming_cdc(
         spark,
@@ -704,18 +694,15 @@ def stream_postings_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     txt_postings' oracle verbatim. The lexical member of the
     streaming mergeable-state family (dedup bands, HLL registers, ANN
     cells, CDC state)."""
-    import tempfile
-
     from tugas_2_big_data_spark.sources.catalog import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="tugas2_stream_postings_")
-    se.write_ingest_batches(
+    work = _stage(
+        "tugas2_stream_postings_",
         [
             docs.filter(F.col("doc_id") % 2 == 0),
             docs.filter(F.col("doc_id") % 2 == 1),
         ],
-        f"{work}/batches",
     )
     out = se.run_streaming_postings(
         spark, f"{work}/batches", f"{work}/ckpt"
@@ -734,6 +721,26 @@ from tugas_2_big_data_spark.queries_analytics import (  # noqa: E402
 )
 
 
+def _er_two_batches(
+    spark: SparkSession, sf_dir: str, durable: bool
+) -> DataFrame:
+    dirty = _er_stream_dirty(spark, sf_dir)
+    work = _stage(
+        "tugas2_stream_er_",
+        [
+            dirty.filter(F.col("d_id") % 2 == 0),
+            dirty.filter(F.col("d_id") % 2 == 1),
+        ],
+    )
+    return se.run_streaming_er(
+        spark,
+        f"{work}/batches",
+        f"{work}/ckpt",
+        _er_stream_base(spark, sf_dir),
+        state_dir=f"{work}/state" if durable else None,
+    )
+
+
 @register("stream_er_match", _ER_STREAM_SQL)
 def stream_er_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution ON THE INGEST STREAM
@@ -747,21 +754,18 @@ def stream_er_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds, quality gate, postings) to record linkage — the shape of
     a registry that must resolve entities as records arrive, not in
     a nightly batch."""
-    import tempfile
+    return _er_two_batches(spark, sf_dir, durable=False)
 
-    dirty = _er_stream_dirty(spark, sf_dir)
-    base = _er_stream_base(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="tugas2_stream_er_")
-    se.write_ingest_batches(
-        [
-            dirty.filter(F.col("d_id") % 2 == 0),
-            dirty.filter(F.col("d_id") % 2 == 1),
-        ],
-        f"{work}/batches",
-    )
-    return se.run_streaming_er(
-        spark, f"{work}/batches", f"{work}/ckpt", base
-    )
+
+@register("stream_er_match_durable", _ER_STREAM_SQL)
+def stream_er_match_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """stream_er_match's CRASH-SAFE twin: the same two-micro-batch ER
+    drain run through `state_dir`, so a killed process resumes from
+    its checkpoint with nothing lost (restart-equivalence chaos-tested
+    in test_streaming.py). Shares er_match_pairs' oracle verbatim —
+    the driver value-certifies that the durable path emits exactly the
+    in-memory drain's relation."""
+    return _er_two_batches(spark, sf_dir, durable=True)
 
 
 # safe import: queries.py registers queries_analytics before this module
@@ -769,6 +773,29 @@ from tugas_2_big_data_spark.queries_analytics import (  # noqa: E402
     _DQ_ORDERS_SQL as _DQ_STREAM_SQL,
     _orders_dq_checks,
 )
+
+
+def _dq_two_batches(
+    spark: SparkSession, sf_dir: str, durable: bool
+) -> DataFrame:
+    from tugas_2_big_data_spark.sources.catalog import load_table
+
+    orders = load_table(spark, "orders", sf_dir)
+    work = _stage(
+        "tugas2_stream_dq_",
+        [
+            orders.filter(F.col("o_orderkey") % 2 == 0),
+            orders.filter(F.col("o_orderkey") % 2 == 1),
+        ],
+    )
+    return se.run_streaming_dq(
+        spark,
+        f"{work}/batches",
+        f"{work}/ckpt",
+        load_table(spark, "customer", sf_dir),
+        _orders_dq_checks(),
+        state_dir=f"{work}/state" if durable else None,
+    )
 
 
 @register("stream_dq_gate", _DQ_STREAM_SQL)
@@ -785,86 +812,14 @@ def stream_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming symmetry for the warehouse-gate family: ingest dedup,
     ANN appends, CDC folds, quality gate, postings, ER, and now the
     publish gate."""
-    import tempfile
-
-    from tugas_2_big_data_spark.sources.catalog import load_table
-
-    orders = load_table(spark, "orders", sf_dir)
-    cust = load_table(spark, "customer", sf_dir)
-    work = tempfile.mkdtemp(prefix="tugas2_stream_dq_")
-    se.write_ingest_batches(
-        [
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        ],
-        f"{work}/batches",
-    )
-    return se.run_streaming_dq(
-        spark, f"{work}/batches", f"{work}/ckpt", cust, _orders_dq_checks()
-    )
-
-
-@register("stream_er_match_durable", _ER_STREAM_SQL)
-def stream_er_match_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """stream_er_match's CRASH-SAFE twin: the same two-micro-batch ER
-    drain run through the `state_dir` mode — each batch's matches land
-    as a batch-id-keyed parquet overwrite and the final relation is
-    assembled from disk, so a killed process resumes from its
-    checkpoint with nothing lost and a replayed batch overwrites its
-    own partition (restart-equivalence chaos-tested in
-    test_streaming.py). Shares er_match_pairs' oracle verbatim — the
-    driver value-certifies that the durable path emits exactly the
-    in-memory drain's relation."""
-    import tempfile
-
-    dirty = _er_stream_dirty(spark, sf_dir)
-    base = _er_stream_base(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="tugas2_stream_er_dur_")
-    se.write_ingest_batches(
-        [
-            dirty.filter(F.col("d_id") % 2 == 0),
-            dirty.filter(F.col("d_id") % 2 == 1),
-        ],
-        f"{work}/batches",
-    )
-    return se.run_streaming_er(
-        spark,
-        f"{work}/batches",
-        f"{work}/ckpt",
-        base,
-        state_dir=f"{work}/state",
-    )
+    return _dq_two_batches(spark, sf_dir, durable=False)
 
 
 @register("stream_dq_gate_durable", _DQ_STREAM_SQL)
 def stream_dq_gate_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stream_dq_gate's CRASH-SAFE twin: the DQ publish gate drained
-    through the `state_dir` mode — per-batch counters and distinct
-    keys persist as batch-id-keyed overwrites, and the final report
-    computes uniqueness ORDER-INDEPENDENTLY as sum(nonnull) −
-    |distinct ∪ keys| (the same value the in-memory telescoping
-    reaches, restart- and replay-proof by construction;
-    chaos-tested in test_streaming.py). Shares
+    through `state_dir`, its uniqueness computed ORDER-INDEPENDENTLY
+    from the stored per-batch keys (restart- and replay-proof by
+    construction; chaos-tested in test_streaming.py). Shares
     dq_expectations_orders' oracle verbatim."""
-    import tempfile
-
-    from tugas_2_big_data_spark.sources.catalog import load_table
-
-    orders = load_table(spark, "orders", sf_dir)
-    cust = load_table(spark, "customer", sf_dir)
-    work = tempfile.mkdtemp(prefix="tugas2_stream_dq_dur_")
-    se.write_ingest_batches(
-        [
-            orders.filter(F.col("o_orderkey") % 2 == 0),
-            orders.filter(F.col("o_orderkey") % 2 == 1),
-        ],
-        f"{work}/batches",
-    )
-    return se.run_streaming_dq(
-        spark,
-        f"{work}/batches",
-        f"{work}/ckpt",
-        cust,
-        _orders_dq_checks(),
-        state_dir=f"{work}/state",
-    )
+    return _dq_two_batches(spark, sf_dir, durable=True)

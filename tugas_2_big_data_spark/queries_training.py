@@ -4931,25 +4931,24 @@ def dedup_incremental_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout: n_buckets files instead of O(batches × partitions), and a
     bucket spec so the per-batch gate join plans with no state-side
     Exchange (pinned in tests/test_bucketing.py)."""
-    import tempfile
-
+    from tugas_2_big_data_spark.session import scratch_dir
     from tugas_2_big_data_spark.sources import bucketing
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     seen_docs = docs.filter(F.col("doc_id") % 3 == 0)
-    state_dir = tempfile.mkdtemp(prefix="t2bd_fp_state_appends_")
+    work = scratch_dir("t2bd_fp_state_")
     for i in range(8):  # 8 ingest batches, each an append-only merge
         piece = seen_docs.filter(F.pmod(F.floor(F.col("doc_id") / 3), 8) == i)
         dedup.fingerprint_groups(piece).select("fp").write.mode(
             "append"
-        ).parquet(state_dir)
+        ).parquet(f"{work}/appends")
     state = bucketing.compact_appended_state(
         spark,
-        state_dir,
+        f"{work}/appends",
         "t2bd_fp_state_compacted",
         ["fp"],
         n_buckets=8,
-        path=state_dir + "_compacted",
+        path=f"{work}/compacted",
     )
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     return dedup.incremental_new_docs(batch, state).select("doc_id")

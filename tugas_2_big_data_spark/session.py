@@ -4,7 +4,8 @@ The reference builds ad-hoc sessions (one per Mongo collection at
 ``yfinance_transform.py:104-107``, a 2g/2g local[*] session at
 ``idx_transform.py:76-93``). Our engine uses ONE session with AQE and
 Arrow enabled, UTC timezone (oracle comparability), and shuffle
-parallelism sized to the machine rather than the Spark default of 200.
+parallelism sized to the session's cores rather than the Spark default
+of 200.
 
 At cluster scale the same factory applies: AQE handles runtime
 coalescing/skew; shuffle partitions should be ~2-3× total cores.
@@ -63,15 +64,12 @@ PERF_CONF: dict[str, str] = {
 def get_spark(
     app_name: str = "tugas_2_big_data_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -89,7 +87,20 @@ def get_spark(
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _set_shuffle_width(spark)
     return spark
+
+
+def _set_shuffle_width(spark: SparkSession) -> None:
+    """One shuffle partition per core, best effort like PERF_CONF.
+    Streaming micro-batches run without AQE, so this width is what a
+    stateful stream stage runs; Spark's default would run 200 small
+    tasks per stage on a 4-core host."""
+    try:
+        width = str(spark.sparkContext.defaultParallelism)
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    except Exception as ex:  # noqa: BLE001 — speed only, never values
+        _log.warning("shuffle width not applied: %s", ex)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -98,8 +109,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The verification driver supplies its own SparkSession; these confs are
     runtime-mutable so we can still pin the semantics our plans rely on
     (UTC timestamps for date_format grains, non-ANSI casts) and the
-    performance settings (AQE, Arrow). A semantic conf that cannot be
-    set, or reads back different, raises; a perf conf is best effort.
+    performance settings (AQE, Arrow, shuffle width). A semantic conf
+    that cannot be set, or reads back different, raises; a perf conf is
+    best effort.
     """
     for k, v in SEMANTIC_CONF.items():
         try:
@@ -114,8 +126,20 @@ def tune_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception as ex:  # noqa: BLE001 — speed only, never values
             _log.warning("perf conf %s=%s not applied: %s", k, v, ex)
+    _set_shuffle_width(spark)
     ship_package(spark)
     return spark
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory that lives as long as the active SparkContext.
+
+    It lies under ``SparkFiles.getRootDirectory()``, which Spark
+    deletes on ``stop()``. Frames a query returns may read files here
+    lazily, so the files must outlive the query, but not the session."""
+    from pyspark import SparkFiles
+
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
 
 
 _SHIPPED: set[str] = set()

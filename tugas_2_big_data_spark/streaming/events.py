@@ -11,33 +11,51 @@ dropped); append output mode emits each window once, on watermark
 passage. For exactly-once delivery to transactional sinks use
 foreachBatch. sessionization uses session_window (gap-based), the
 streaming-native replacement for lag()+cumsum sessionization in batch.
+
+Drain contract, for every bounded drain below:
+- One drain. `_drain` starts a configured writer, runs
+  `processAllAvailable`, and stops the query in a `finally`. The
+  foreachBatch folds read their ingest deltas through one reader,
+  `_batch_files`: one parquet file per micro-batch, in arrival order
+  (`write_ingest_batches`).
+- One state layout. The crash-safe folds (`run_evolving_near_dup`,
+  `run_streaming_er`, `run_streaming_dq`, each given a ``state_dir``)
+  keep state only through `_BatchStore`:
+  ``{state_dir}/{kind}/b{batch_id:06d}``, one overwrite per kind and
+  micro-batch. A checkpoint replay rewrites its own footprint instead
+  of duplicating it, and a killed run resumes with the earlier batches
+  on disk. The names are zero-padded, so lexical order is batch order,
+  and no directory has the ``name=value`` form, so partition discovery
+  never adds a column. An empty micro-batch is still committed, so a
+  durable fold writes its (empty) footprint too.
+- Reads scoped by the commit log. A fold's final result reads only the
+  batch ids its checkpoint committed, so state a foreign run left in a
+  reused ``state_dir`` never enters it.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from tugas_2_big_data_spark.sources.catalog import TABLES
 
 
 def _committed_batch_ids(checkpoint_dir: str) -> set[int]:
     """Batch ids this checkpoint has COMMITTED — one integer-named
-    file per committed micro-batch under ``{checkpoint}/commits/``.
-    The durable drains key their on-disk state by batch id, so this
-    set is the authoritative scope of "this logical stream": a final
-    read filtered to it cannot fold stale ``batch=N`` partitions left
-    in a reused state_dir by an earlier aborted run that drained MORE
-    batches (a foreign run's ids lie outside this checkpoint's commit
-    log). Local-fs listing, same deployment constraint as the
-    batch-keyed state writes themselves — and that constraint is
-    enforced LOUDLY: a non-file checkpoint scheme raises
-    NotImplementedError and an unreadable local path re-raises, so a
-    mis-deployment surfaces as an error instead of an empty commit
-    scope silently producing an empty (or zero-batch) result. Only a
-    genuinely MISSING commits dir maps to the empty set — that is the
-    legitimate "this checkpoint committed nothing yet" state."""
+    file per committed micro-batch under ``{checkpoint}/commits/``:
+    the scope of `_BatchStore.read_committed`. Local-fs listing, the
+    same deployment constraint as the batch-keyed state writes
+    themselves — and that constraint is enforced LOUDLY: a non-file
+    checkpoint scheme raises NotImplementedError and an unreadable
+    local path re-raises, so a mis-deployment surfaces as an error
+    instead of an empty commit scope silently producing an empty (or
+    zero-batch) result. Only a genuinely MISSING commits dir maps to
+    the empty set — that is the legitimate "this checkpoint committed
+    nothing yet" state."""
     import os as _os
     import re as _re
 
@@ -63,6 +81,80 @@ def _committed_batch_ids(checkpoint_dir: str) -> set[int]:
     # empty final result (data loss masquerading as success)
     names = _os.listdir(commits)
     return {int(n) for n in names if n.isdigit()}
+
+
+class _BatchStore:
+    """The crash-safe folds' state: one parquet directory per kind and
+    micro-batch, ``{root}/{kind}/b{batch_id:06d}`` (module docstring)."""
+
+    def __init__(self, root: str) -> None:
+        self.root = root
+
+    def path(self, kind: str, batch_id: int) -> str:
+        return f"{self.root}/{kind}/b{batch_id:06d}"
+
+    def write(self, kind: str, batch_id: int, df: DataFrame) -> None:
+        df.write.mode("overwrite").parquet(self.path(kind, batch_id))
+
+    def read_before(
+        self, spark: SparkSession, kind: str, batch_id: int
+    ) -> DataFrame | None:
+        """The batches strictly before ``batch_id``: a replayed batch
+        must not see its own earlier attempt."""
+        return self._read(spark, kind, lambda i: i < batch_id)
+
+    def read_committed(
+        self, spark: SparkSession, kind: str, checkpoint_dir: str
+    ) -> DataFrame | None:
+        return self._read(
+            spark, kind, _committed_batch_ids(checkpoint_dir).__contains__
+        )
+
+    def _read(self, spark, kind, keep) -> DataFrame | None:
+        import os
+
+        base = f"{self.root}/{kind}"
+        names = sorted(os.listdir(base)) if os.path.isdir(base) else []
+        dirs = [
+            f"{base}/{n}"
+            for n in names
+            if n[:1] == "b" and n[1:].isdigit() and keep(int(n[1:]))
+        ]
+        return spark.read.parquet(*dirs) if dirs else None
+
+
+def _drain(writer: DataStreamWriter) -> None:
+    """Run a bounded stream to completion; the query never outlives
+    the call, also when a batch fails."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _drain_batches(stream: DataFrame, fold, checkpoint_dir: str) -> None:
+    _drain(
+        stream.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", checkpoint_dir
+        )
+    )
+
+
+def _batch_files(spark: SparkSession, batches_dir: str, schema) -> DataFrame:
+    """The ingest deltas `write_ingest_batches` wrote, one micro-batch
+    per file."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+        .parquet(batches_dir)
+    )
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame | None:
+    return functools.reduce(DataFrame.unionByName, frames) if frames else None
 
 
 def read_events_stream(
@@ -298,16 +390,11 @@ def run_to_memory(
     holds the sink itself, while the view name would keep the sink's
     rows in driver memory for the life of the session."""
     spark = stream_df.sparkSession
-    q = (
+    _drain(
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     out = spark.sql(f"SELECT * FROM {name}")
     spark.catalog.dropTempView(name)
     return out
@@ -470,87 +557,38 @@ def run_evolving_near_dup(
     extending the static-state parity `stream_incremental_near_dup`
     established).
 
-    ``state_dir`` switches this — the one streaming fold whose state
-    is both evolving AND order-dependent — to the CRASH-SAFE layout:
-    each micro-batch's accepted rows, shingle sets, and band keys land
-    under ``{state_dir}/{accepted,accepted_sets,accepted_bands}/b{id}``
-    as batch-id-keyed overwrites, and every fold gates against the
-    initial state plus the persisted deltas of STRICTLY EARLIER batch
-    ids. The strict-inequality read is what makes a checkpoint replay
-    correct: a re-delivered batch must not see its own prior attempt's
-    state (its docs would LSH-collide with themselves and every one
-    would be rejected); excluding batch id ≥ self re-gates it against
-    exactly the state the first attempt saw, and the overwrite
-    replaces its footprint. A killed process restarts with nothing
-    lost — earlier batches' deltas are on disk. Local-fs directory
-    listing keys the deltas (same constraint as the ivf appends); an
-    object-store deployment keys them under a table format's
-    transaction instead."""
-    import glob as _glob
-    import os as _os
-
+    ``state_dir``: None folds in process, which is faster; a path
+    folds through the crash-safe store, which survives a kill. The
+    durable fold gates each batch against the initial state plus the
+    accepted sets and band keys of STRICTLY EARLIER batch ids, so a
+    checkpoint replay re-gates a batch against exactly the state its
+    first attempt saw (its own earlier attempt would LSH-collide with
+    every one of its docs)."""
     from tugas_2_big_data_spark.operators import dedup
 
-    state = {
-        "bands": seen_bands.localCheckpoint(),
-        "sets": seen_sets.localCheckpoint(),
-    }
+    store = _BatchStore(state_dir) if state_dir is not None else None
+    state: dict[str, DataFrame] = {}
+    if store is None:
+        state["bands"] = seen_bands.localCheckpoint()
+        state["sets"] = seen_sets.localCheckpoint()
     accepted: list[DataFrame] = []
 
-    def _delta_dirs(kind: str, before: int) -> list[str]:
-        return sorted(
-            d
-            for d in _glob.glob(f"{state_dir}/{kind}/b*")
-            if int(_os.path.basename(d)[1:]) < before
-        )
-
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            if state_dir is not None:
-                # an empty batch is still COMMITTED, so its id enters
-                # the final fold's scope — claim the on-disk footprint
-                # with empty overwrites or a same-id b-dir left by a
-                # foreign run in a reused state_dir would fold its
-                # rows into this run's result
-                b0 = batch_df.select(id_col, "text").limit(0)
-                s0 = dedup.shingle_sets(b0, id_col=id_col)
-                bd0 = dedup.lsh_band_keys(
-                    dedup.minhash_signatures_from_sets(s0, k, id_col),
-                    k,
-                    bands,
-                    id_col,
-                )
-                tag = f"b{batch_id:06d}"
-                s0.write.mode("overwrite").parquet(
-                    f"{state_dir}/accepted_sets/{tag}"
-                )
-                bd0.write.mode("overwrite").parquet(
-                    f"{state_dir}/accepted_bands/{tag}"
-                )
-                b0.select(
-                    F.lit(batch_id + 1).cast("long").alias("batch"),
-                    id_col,
-                ).write.mode("overwrite").parquet(
-                    f"{state_dir}/accepted/{tag}"
-                )
+        if store is None and batch_df.isEmpty():
             return
         b = batch_df.select(id_col, "text").localCheckpoint()
         b_sets = dedup.shingle_sets(b, id_col=id_col).localCheckpoint()
-        if state_dir is not None:
+        if store is None:
+            sets_state, bands_state = state["sets"], state["bands"]
+        else:
             ss = batch_df.sparkSession
             sets_state, bands_state = seen_sets, seen_bands
-            prior_sets = _delta_dirs("accepted_sets", batch_id)
-            if prior_sets:
-                sets_state = sets_state.unionByName(
-                    ss.read.parquet(*prior_sets)
-                )
+            prior_sets = store.read_before(ss, "accepted_sets", batch_id)
+            if prior_sets is not None:
+                sets_state = sets_state.unionByName(prior_sets)
                 bands_state = bands_state.unionByName(
-                    ss.read.parquet(
-                        *_delta_dirs("accepted_bands", batch_id)
-                    )
+                    store.read_before(ss, "accepted_bands", batch_id)
                 )
-        else:
-            sets_state, bands_state = state["sets"], state["bands"]
         m = dedup.incremental_near_dup(
             b_sets,
             sets_state,
@@ -566,25 +604,19 @@ def run_evolving_near_dup(
             "left_anti",
         ).localCheckpoint()
         acc_sets = b_sets.join(acc.select(id_col), id_col, "left_semi")
-        if state_dir is not None:
+        acc_rows = acc.select(
+            F.lit(batch_id + 1).cast("long").alias("batch"), id_col
+        )
+        if store is not None:
             acc_bands = dedup.lsh_band_keys(
                 dedup.minhash_signatures_from_sets(acc_sets, k, id_col),
                 k,
                 bands,
                 id_col,
             )
-            tag = f"b{batch_id:06d}"
-            acc_sets.write.mode("overwrite").parquet(
-                f"{state_dir}/accepted_sets/{tag}"
-            )
-            acc_bands.write.mode("overwrite").parquet(
-                f"{state_dir}/accepted_bands/{tag}"
-            )
-            acc.select(
-                F.lit(batch_id + 1).cast("long").alias("batch"), id_col
-            ).write.mode("overwrite").parquet(
-                f"{state_dir}/accepted/{tag}"
-            )
+            store.write("accepted_sets", batch_id, acc_sets)
+            store.write("accepted_bands", batch_id, acc_bands)
+            store.write("accepted", batch_id, acc_rows)
             return
         nb, ns = dedup.merge_near_dup_state(
             state["bands"], state["sets"], acc_sets, k, bands, id_col
@@ -595,46 +627,19 @@ def run_evolving_near_dup(
             nb.localCheckpoint(),
             ns.localCheckpoint(),
         )
-        accepted.append(
-            acc.select(
-                F.lit(batch_id + 1).cast("long").alias("batch"), id_col
-            )
-        )
+        accepted.append(acc_rows)
 
-    src = (
-        spark.readStream.schema(f"{id_col} long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(batches_dir)
+    _drain_batches(
+        _batch_files(spark, batches_dir, f"{id_col} long, text string"),
+        gate,
+        checkpoint_dir,
     )
-    q = (
-        src.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    if state_dir is not None:
-        # scope the final fold to this checkpoint's committed batch
-        # ids — a reused state_dir holding b-dirs from a foreign run
-        # that drained MORE batches must not leak them into the result
-        committed = _committed_batch_ids(checkpoint_dir)
-        dirs = sorted(
-            d
-            for d in _glob.glob(f"{state_dir}/accepted/b*")
-            if int(_os.path.basename(d)[1:]) in committed
-        )
-        if not dirs:
-            return spark.createDataFrame([], f"batch long, {id_col} long")
-        return spark.read.parquet(*dirs)
-    if not accepted:
+    if store is not None:
+        out = store.read_committed(spark, "accepted", checkpoint_dir)
+    else:
+        out = _union_all(accepted)
+    if out is None:
         return spark.createDataFrame([], f"batch long, {id_col} long")
-    out = accepted[0]
-    for a in accepted[1:]:
-        out = out.unionByName(a)
     return out
 
 
@@ -669,15 +674,7 @@ def run_streaming_hll(
             state["reg"], breg
         ).localCheckpoint()
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_batches(stream, fold, checkpoint_dir)
     return state["reg"]
 
 
@@ -713,22 +710,9 @@ def run_streaming_ann_append(
         )
         n["batches"] += 1
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(batches_dir)
+    _drain_batches(
+        _batch_files(spark, batches_dir, schema), fold, checkpoint_dir
     )
-    q = (
-        src.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return n["batches"]
 
 
@@ -775,27 +759,12 @@ def run_streaming_cdc(
             merged, key_cols, seq_col, op_col
         ).localCheckpoint()
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(batches_dir)
+    _drain_batches(
+        _batch_files(spark, batches_dir, schema), fold, checkpoint_dir
     )
-    q = (
-        src.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     if state["t"] is None:
         raise RuntimeError("stream delivered no micro-batches")
-    from pyspark.sql import functions as _F
-
-    return state["t"].filter(_F.col(op_col) != delete_op)
+    return state["t"].filter(F.col(op_col) != delete_op)
 
 
 def run_streaming_postings(
@@ -822,37 +791,24 @@ def run_streaming_postings(
     Returns the final postings relation (word, id, tf, positions)."""
     from tugas_2_big_data_spark.operators import text_analysis
 
-    src = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(batches_dir)
-    )
-    state = {"p": None}
+    parts: list[DataFrame] = []
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bp = text_analysis.postings(
-            batch_df, text_col, id_col
-        ).localCheckpoint()
-        state["p"] = (
-            bp if state["p"] is None else state["p"].unionByName(bp)
+        parts.append(
+            text_analysis.postings(batch_df, text_col, id_col).localCheckpoint()
         )
 
-    q = (
-        src.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    _drain_batches(
+        _batch_files(spark, batches_dir, f"{id_col} long, {text_col} string"),
+        fold,
+        checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    if state["p"] is None:
+    out = _union_all(parts)
+    if out is None:
         raise RuntimeError("stream delivered no micro-batches")
-    return state["p"]
+    return out
 
 
 def run_streaming_er(
@@ -875,41 +831,15 @@ def run_streaming_er(
     base side broadcasts or bucket-joins per micro-batch exactly as
     in batch.
 
-    ``state_dir`` switches the fold from in-process accumulation to
-    the CRASH-SAFE layout: each micro-batch's matches are written to
-    ``{state_dir}/batch={id}`` with mode=overwrite, so (a) a process
-    kill loses nothing already folded — a restart with the same
-    checkpoint resumes at the first unconsumed file and the drained
-    relation still equals the uninterrupted run, and (b) a checkpoint
-    replay that re-delivers a batch overwrites its OWN partition
-    instead of duplicating rows (same batch-id-keyed idempotence as
-    the ANN appends). The in-process default stays for single-process
-    drains (the registered query) where localCheckpoint is cheaper
-    than a parquet round-trip per batch."""
+    ``state_dir``: None folds in process, which is faster; a path
+    folds through the crash-safe store, which survives a kill."""
     from tugas_2_big_data_spark.operators import entity_resolution as er
 
-    src = (
-        spark.readStream.schema(
-            "d_id long, d_name string, d_acctbal double, block string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(batches_dir)
-    )
-    state = {"m": None}
+    store = _BatchStore(state_dir) if state_dir is not None else None
+    matches: list[DataFrame] = []
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            if state_dir is not None:
-                # an empty batch is still committed: claim its batch=
-                # partition so a same-id dir from a foreign run in a
-                # reused state_dir can't fold into the final result
-                batch_df.sparkSession.createDataFrame(
-                    [], "d_id long, matched_key long, dist long"
-                ).write.mode("overwrite").parquet(
-                    f"{state_dir}/batch={batch_id}"
-                )
+        if store is None and batch_df.isEmpty():
             return
         cand = er.blocked_candidates(batch_df, base)
         m = er.best_match(cand, max_dist=max_dist).select(
@@ -917,43 +847,27 @@ def run_streaming_er(
             F.col("c_custkey").cast("long").alias("matched_key"),
             F.col("dist").cast("long").alias("dist"),
         )
-        if state_dir is not None:
-            m.write.mode("overwrite").parquet(
-                f"{state_dir}/batch={batch_id}"
-            )
-            return
-        m = m.localCheckpoint()
-        state["m"] = m if state["m"] is None else state["m"].unionByName(m)
+        if store is not None:
+            store.write("matches", batch_id, m)
+        else:
+            matches.append(m.localCheckpoint())
 
-    q = (
-        src.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    _drain_batches(
+        _batch_files(
+            spark,
+            batches_dir,
+            "d_id long, d_name string, d_acctbal double, block string",
+        ),
+        fold,
+        checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    if state_dir is not None:
-        import glob as _glob
-        import os as _os
-
-        # fold only the batch= partitions this checkpoint committed —
-        # a killed run resuming here IS committed; stale partitions
-        # from a foreign aborted run (more batches, different
-        # checkpoint) are outside the commit log and excluded
-        committed = _committed_batch_ids(checkpoint_dir)
-        dirs = sorted(
-            d
-            for d in _glob.glob(f"{state_dir}/batch=*")
-            if int(_os.path.basename(d).split("=", 1)[1]) in committed
-        )
-        if not dirs:
-            raise RuntimeError("streaming ER drained zero batches")
-        return spark.read.parquet(*dirs)
-    if state["m"] is None:
+    if store is not None:
+        out = store.read_committed(spark, "matches", checkpoint_dir)
+    else:
+        out = _union_all(matches)
+    if out is None:
         raise RuntimeError("streaming ER drained zero batches")
-    return state["m"]
+    return out
 
 
 def run_streaming_dq(
@@ -988,26 +902,15 @@ def run_streaming_dq(
     grade, like the reference's driver-side perf accumulation; the
     key state is a key-column relation, never the rows.
 
-    ``state_dir`` switches the fold to the CRASH-SAFE layout: each
-    micro-batch overwrites ``{state_dir}/counters/batch={id}`` (one
-    row: scalar check counts, nonnull-key count, FK orphan count) and
-    ``{state_dir}/keys/batch={id}`` (the batch's distinct keys), and
-    the final report is assembled from the persisted artifacts —
-    uniqueness as sum(nonnull) − |distinct ∪ keys|, the same value
-    the in-memory telescoping reaches but ORDER-INDEPENDENT, so a
-    kill/restart (earlier batches' artifacts survive on disk) or a
-    checkpoint replay (a re-delivered batch overwrites its own
-    partitions) cannot change the report. The in-process default
-    stays for single-process drains (the registered query)."""
+    ``state_dir``: None folds in process, which is faster; a path
+    folds through the crash-safe store, which survives a kill. The
+    durable fold stores per batch one row of counters (scalar check
+    counts, non-null keys, FK orphans) and the batch's distinct keys,
+    and computes uniqueness as sum(non-null) − |∪ keys|: the value the
+    in-process telescoping reaches, but independent of batch order."""
     from tugas_2_big_data_spark.sources.catalog import TABLES
 
-    src = (
-        spark.readStream.schema(TABLES["orders"])
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(batches_dir)
-    )
+    store = _BatchStore(state_dir) if state_dir is not None else None
     agg_checks = [(n, c) for n, c in checks if n != unique_name]
     totals = {n: 0 for n, _ in agg_checks}
     totals[unique_name] = 0
@@ -1015,39 +918,35 @@ def run_streaming_dq(
     state = {"seen": None}
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty() and state_dir is None:
+        if store is None and batch_df.isEmpty():
             return
-        # durable mode deliberately falls through on an empty batch:
-        # the agg on zero rows yields the all-zero counters row and an
-        # empty key set, which overwrite (claim) this committed batch
-        # id's partitions — a same-id dir left by a foreign run in a
-        # reused state_dir would otherwise survive into the report
         b = batch_df.localCheckpoint()
-        if state_dir is not None:
-            orphans = b.join(
-                parent.select(F.col(fk_parent).alias(fk_child)),
-                on=fk_child,
-                how="left_anti",
-            ).agg(F.count(F.lit(1)).cast("long").alias("_fk_orphans"))
+        orphans = b.join(
+            parent.select(F.col(fk_parent).alias(fk_child)),
+            on=fk_child,
+            how="left_anti",
+        )
+        keys = (
+            b.select(F.col(key_col).alias("k"))
+            .filter(F.col("k").isNotNull())
+            .distinct()
+        )
+        if store is not None:
             counters = b.agg(
                 # coalesce: F.sum on a zero-row batch is NULL; the
-                # claimed footprint of an empty batch must be all-zero
+                # footprint of an empty batch must be all-zero
                 *[
                     F.coalesce(c.cast("long"), F.lit(0)).alias(n)
                     for n, c in agg_checks
                 ],
                 F.count(key_col).cast("long").alias("_nonnull_keys"),
-            ).crossJoin(orphans)
-            counters.coalesce(1).write.mode("overwrite").parquet(
-                f"{state_dir}/counters/batch={batch_id}"
+            ).crossJoin(
+                orphans.agg(
+                    F.count(F.lit(1)).cast("long").alias("_fk_orphans")
+                )
             )
-            (
-                b.select(F.col(key_col).alias("k"))
-                .filter(F.col("k").isNotNull())
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/keys/batch={batch_id}")
-            )
+            store.write("counters", batch_id, counters.coalesce(1))
+            store.write("keys", batch_id, keys)
             return
         row = b.agg(
             *[c.cast("long").alias(n) for n, c in agg_checks],
@@ -1058,11 +957,6 @@ def run_streaming_dq(
         for n, _ in agg_checks:
             totals[n] += row[n]
         totals[unique_name] += row["_within_dups"]
-        keys = (
-            b.select(F.col(key_col).alias("k"))
-            .filter(F.col("k").isNotNull())
-            .distinct()
-        )
         if state["seen"] is not None:
             totals[unique_name] += (
                 keys.join(state["seen"], "k", "left_semi").count()
@@ -1072,45 +966,17 @@ def run_streaming_dq(
             )
         else:
             state["seen"] = keys.localCheckpoint()
-        totals[fk_name] += (
-            b.join(
-                parent.select(F.col(fk_parent).alias(fk_child)),
-                on=fk_child,
-                how="left_anti",
-            ).count()
-        )
+        totals[fk_name] += orphans.count()
 
-    q = (
-        src.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    _drain_batches(
+        _batch_files(spark, batches_dir, TABLES["orders"]),
+        fold,
+        checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    if state_dir is not None:
-        import glob as _glob
-        import os as _os
-
-        committed = _committed_batch_ids(checkpoint_dir)
-
-        def _batch_dirs(kind: str) -> list[str]:
-            # only this checkpoint's committed batches — stale
-            # partitions from a foreign run in a reused state_dir are
-            # outside the commit log and must not fold into the report
-            return sorted(
-                d
-                for d in _glob.glob(f"{state_dir}/{kind}/batch=*")
-                if int(_os.path.basename(d).split("=", 1)[1]) in committed
-            )
-
-        counter_dirs = _batch_dirs("counters")
-        if not counter_dirs:
-            # same explicit error the in-memory path raises, instead
-            # of a raw PATH_NOT_FOUND/schema-inference failure
+    if store is not None:
+        counters = store.read_committed(spark, "counters", checkpoint_dir)
+        if counters is None:
             raise RuntimeError("streaming DQ drained zero batches")
-        counters = spark.read.parquet(*counter_dirs)
         sums = counters.agg(
             *[
                 F.sum(n).cast("long").alias(n)
@@ -1120,7 +986,7 @@ def run_streaming_dq(
             F.sum("_fk_orphans").cast("long").alias("_fk_orphans"),
         ).collect()[0]
         n_distinct = (
-            spark.read.parquet(*_batch_dirs("keys"))
+            store.read_committed(spark, "keys", checkpoint_dir)
             .select("k")
             .distinct()
             .count()
