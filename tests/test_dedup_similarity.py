@@ -303,17 +303,42 @@ def test_cell_assigner_rank_prefix_property(spark):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("query_vec"),
     )
-    ranked = assign(q, "query_id", "query_vec", 4, rank_col="crn")
+    ranked = assign(q, "query", 4, rank_col="crn")
     for n in (1, 2, 4):
         plain = {
             (r.query_id, r.cid)
-            for r in assign(q, "query_id", "query_vec", n).collect()
+            for r in assign(q, "query", n).collect()
         }
         prefix = {
             (r.query_id, r.cid)
             for r in ranked.filter(F.col("crn") <= n).collect()
         }
         assert prefix == plain, n
+
+
+def test_nprobe_curve_hits_equal_served_topk_hits(spark):
+    """The operating curve ranks through the serving path: at every
+    curve point, n_hits is the number of `ivf_topk_from_index` top-5
+    rows (same artifact, same 5 queries) that are in the exact top-5,
+    so the curve cannot drift from what serving returns."""
+    from conftest import SF_UNIT
+    # queries first: importing queries_training alone is circular
+    from tugas_2_big_data_spark import queries  # noqa: F401
+    from tugas_2_big_data_spark import queries_training as qt
+    from tugas_2_big_data_spark.sources.catalog import load_table
+
+    curve = {
+        r.nprobe: r.n_hits
+        for r in qt.ann_ivf_nprobe_curve(spark, SF_UNIT).collect()
+    }
+    assert sorted(curve) == list(qt._NPROBE_CURVE)
+    emb = load_table(spark, "embeddings", SF_UNIT)
+    q5 = emb.filter(F.col("vec_id") < 5)
+    path = qt._ann_artifact_dir(SF_UNIT, "ivf")
+    exact = similarity.cosine_topk(emb, q5, k=5).select("query_id", "nbr_id")
+    for n in qt._NPROBE_CURVE:
+        served = similarity.ivf_topk_from_index(spark, path, q5, nprobe=n, k=5)
+        assert served.join(exact, ["query_id", "nbr_id"]).count() == curve[n], n
 
 
 def test_ivf_topk_structure(spark):

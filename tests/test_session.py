@@ -7,7 +7,9 @@
   depend on a session conf it does not own);
 - ``tune_session`` raises when a semantic conf cannot be applied, and
   keeps going when a perf conf cannot;
-- ``tune_session`` sizes the shuffle width to the session's cores.
+- ``tune_session`` sizes the shuffle width to the session's cores;
+- the ANN family ranks through one function: a ``row_number()`` window
+  partitioned by ``query_id`` is built in one function only.
 """
 
 from __future__ import annotations
@@ -66,6 +68,30 @@ def test_no_package_code_names_broadcast_timeout():
         and "broadcastTimeout" in node.value
     ]
     assert offenders == []
+
+
+def test_one_function_builds_the_per_query_topk_window():
+    """Per module-level function, nested helpers included: only
+    `similarity._topk` builds a row_number() window partitioned by
+    query_id."""
+    builders = []
+    for rel in ("operators/similarity.py", "queries_training.py"):
+        tree = ast.parse((PKG / rel).read_text())
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = [n for n in ast.walk(fn) if isinstance(n, ast.Call)]
+            per_query = any(
+                _callee(c) == "partitionBy"
+                and any(
+                    isinstance(a, ast.Constant) and a.value == "query_id"
+                    for a in c.args
+                )
+                for c in calls
+            )
+            if per_query and any(_callee(c) == "row_number" for c in calls):
+                builders.append(f"{rel}:{fn.name}")
+    assert builders == ["operators/similarity.py:_topk"]
 
 
 class _StubConf:

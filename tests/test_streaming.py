@@ -1100,3 +1100,23 @@ def test_scratch_dir_lives_under_the_spark_files_root(spark):
     d = scratch_dir("tugas2_stream_test_")
     assert os.path.isdir(d)
     assert os.path.dirname(os.path.realpath(d)) == root
+
+
+def test_ship_package_zips_under_the_spark_files_root(spark, monkeypatch):
+    """The package zip handed to addPyFile lies under the SparkFiles
+    root, which Spark deletes on stop(), so no zip outlives the
+    session."""
+    import os
+
+    from pyspark import SparkFiles
+
+    from tugas_2_big_data_spark import session
+
+    shipped = []
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", shipped.append)
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    session.ship_package(spark)
+    [zip_path] = shipped
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    assert os.path.realpath(zip_path).startswith(root + os.sep)
+    assert os.path.isfile(zip_path)

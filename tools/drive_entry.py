@@ -19,9 +19,12 @@ TABLES = [
 # the external driver compares at sf0.01; override to certify the same
 # oracles at another tier (e.g. sf0.1 — 10x the driver's data)
 SF_DIR = os.environ.get("SPARK_GRAFT_DRIVE_SF_DIR", "/root/testdata/sf0.01")
-# per-query work dirs must not outlive the session; tugas2_ann_index is
-# a deliberate cross-session artifact cache and is not checked
-LEAK_PREFIXES = ("tugas2_stream_", "t2bd_fp_state_")
+# per-query work dirs and the shipped package zip must not outlive the
+# session; tugas2_ann_index is a deliberate cross-session artifact cache
+# and is not checked
+LEAK_PREFIXES = (
+    "tugas2_stream_", "t2bd_fp_state_", "tugas_2_big_data_spark_pyfiles_"
+)
 
 
 def leak_candidates():

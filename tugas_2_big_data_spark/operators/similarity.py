@@ -12,17 +12,61 @@ BASELINE.json north-star).
 
 All arithmetic in DOUBLE: the oracle (DuckDB list_cosine_similarity)
 computes float32 when fed FLOAT[], so both sides cast to double first.
+
+The ANN family (exact, IVF, SQ, IVF-SQ, PQ, IVF-PQ) shares one serve
+core; per-function docstrings describe only what a codec adds to it.
+
+- Sides. `_side` is the one id/vector projection: the corpus side is
+  (nbr_id, nbr_vec), the query side (query_id, query_vec). A coarse
+  quantizer's `_cell_assigner` adds `cid` (one cell per corpus row,
+  nprobe cells per query).
+- A codec is train, encode and serve. Train fits the quantizer state
+  (coarse centroids, SQ bounds, PQ codebooks). Encode turns assigned
+  corpus rows into the relation that gets stored: for IVF the cell
+  assignment itself (the inverted file keeps nbr_vec as it is), for
+  SQ and IVF-SQ `_sq_encode`, for PQ and IVF-PQ `_pq_encode` (the
+  residual IVF-PQ encodes `_residual` rows). Serve
+  scores a query batch against that relation (`_serve`: a cid
+  equi-join when the queries carry probed cells, else a broadcast of
+  the query batch over the relation; self-pairs never score). The
+  in-query `*_topk` is train → encode → serve; `*_build_index` is
+  train → encode → write; `*_append_to_index` is read the frozen
+  state → encode → append; `*_topk_from_index` is read → serve. An
+  artifact-served result therefore equals the in-query result for the
+  same state: parquet round-trips doubles and int codes exactly.
+- One ranker, `_topk`: partitioned by query_id (plus optional keys),
+  ordered by the score — cosine descending, ADC distance ascending —
+  then nbr_id ascending; `rk` is row_number as a long, rows with
+  rk <= k survive, and the score is rounded to 9 places only AFTER
+  ranking, so the order never depends on rounding while the value
+  hash-compares stably across engines whose fold order differs in
+  the last bit.
+- Artifact layout per kind, one sub-directory each:
+  IVF `centroids/` (cid, cvec) and `invfile/` (nbr_id, nbr_vec, meta);
+  SQ `bounds/` (mins, maxs) and `codes/` (nbr_id, codes);
+  IVF-SQ `centroids/`, `bounds/` and `codes/` (nbr_id, codes, meta);
+  PQ `codebooks/` (one row, `_cs{s}` per subspace) and `codes/`
+  (nbr_id, code0..code{m-1}); IVF-PQ and residual IVF-PQ `coarse/`
+  (cid, cvec), `codebooks/` and `codes/` (nbr_id, code0.., meta).
+  Every relation with a cid is hive-partitioned by cid and written by
+  `_write_cells`. The layout is frozen: an artifact store outlives the
+  code that filled it (the registry's store is keyed by corpus path
+  and mtime, not by code version, and probes one sub-directory to
+  decide whether to build), so a renamed part or column would be
+  looked for in an artifact an older build wrote.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import posixpath
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from tugas_2_big_data_spark.operators.partitioning import fan_out
+from tugas_2_big_data_spark.sources import sinks
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -54,6 +98,108 @@ def cosine_sql(a: str, b: str) -> str:
     return f"({dot} / nullif({na} * {nb}, cast(0.0 as double)))"
 
 
+def _side(
+    df: DataFrame, side: str, id_col: str, vec_col: str, *extra
+) -> DataFrame:
+    """The one id/vector projection of an ANN input: `side` "nbr" gives
+    (nbr_id, nbr_vec), "query" gives (query_id, query_vec); `extra`
+    columns (index metadata, labels) ride along."""
+    return df.select(
+        F.col(id_col).alias(f"{side}_id"),
+        F.col(vec_col).cast("array<double>").alias(f"{side}_vec"),
+        *extra,
+    )
+
+
+def _topk(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    descending: bool = False,
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one per-query top-k ranker (tie and rounding rule in the
+    module docstring) → (*by, query_id, nbr_id, score, rk)."""
+    w = Window.partitionBy(*by, "query_id").orderBy(
+        F.desc(score) if descending else F.asc(score), F.asc("nbr_id")
+    )
+    return (
+        scored.withColumn("rk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rk") <= k)
+        .select(*by, "query_id", "nbr_id", F.round(score, 9).alias(score), "rk")
+    )
+
+
+def _candidates(q: DataFrame, rel: DataFrame) -> DataFrame:
+    """Every (query, stored row) pair a serve scores: the probed cells'
+    rows when the query batch carries cids, else the whole relation
+    under the broadcast batch; self-pairs excluded."""
+    if "cid" in q.columns:
+        return q.join(rel, "cid").filter(F.col("nbr_id") != F.col("query_id"))
+    return rel.join(F.broadcast(q), F.col("nbr_id") != F.col("query_id"))
+
+
+def _cosine_score() -> Column:
+    return cosine(F.col("query_vec"), F.col("nbr_vec"))
+
+
+def _serve(
+    q: DataFrame, rel: DataFrame, k: int, adc: Column | None = None
+) -> DataFrame:
+    """Score a query batch against a stored relation and rank: exact
+    cosine over nbr_vec (descending), or the codec's `adc` distance
+    (ascending) → (query_id, nbr_id, cosine | adc_dist, rk)."""
+    score = "cosine" if adc is None else "adc_dist"
+    scored = _candidates(q, rel).select(
+        "query_id",
+        "nbr_id",
+        (_cosine_score() if adc is None else adc).alias(score),
+    )
+    return _topk(scored, score, k, descending=adc is None)
+
+
+def _read(
+    spark, path: str, part: str, where: Column | None = None
+) -> DataFrame:
+    """One artifact part; a metadata predicate goes on the scan itself."""
+    rel = spark.read.parquet(posixpath.join(path, part))
+    return rel if where is None else rel.filter(where)
+
+
+def _keys(rel: DataFrame) -> list:
+    """A stored relation's row keys: cid (a partition column reads back
+    as int, so cast to the assigner's long) when present, and nbr_id."""
+    cid = [F.col("cid").cast("long")] if "cid" in rel.columns else []
+    return [*cid, "nbr_id"]
+
+
+def _stored(
+    spark, path: str, part: str, *payload: str, where: Column | None = None
+) -> DataFrame:
+    """A cid-partitioned artifact relation as serving reads it."""
+    rel = _read(spark, path, part, where)
+    return rel.select(*_keys(rel), *payload)
+
+
+def _layout(rel: DataFrame, *payload) -> list:
+    """Stored column order: cid (once assigned), nbr_id, the codec's
+    payload, then any metadata columns the corpus side carried."""
+    keys = [c for c in ("cid", "nbr_id") if c in rel.columns]
+    meta = [c for c in rel.columns if c not in ("cid", "nbr_id", "nbr_vec")]
+    return [*keys, *payload, *meta]
+
+
+def _write_cells(rel: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """The one cell-partitioned write. Repartition BY CID first: without
+    it every write task fans out a file into every cell directory
+    (tasks × nlist tiny files); with it each cell's rows coalesce into
+    one task, so its file(s) are the contiguous inverted list serving
+    scans."""
+    sinks.write_parquet(
+        rel.repartition(F.col("cid")), path, mode=mode, partition_by=["cid"]
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -62,28 +208,10 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query vector (excluding self)."""
-    from pyspark.sql import Window
-
-    c = fan_out(corpus).select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("query_vec"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("nbr_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("query_vec"), F.col("nbr_vec")))
-        .select("query_id", "nbr_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        # rounded AFTER ranking: stable hash-compare across engines whose
-        # fold order differs in the last float bit
-        .withColumn("cosine", F.round("cosine", 9))
+    return _serve(
+        _side(queries, "query", id_col, vec_col),
+        _side(fan_out(corpus), "nbr", id_col, vec_col),
+        k,
     )
 
 
@@ -179,14 +307,11 @@ def _cell_assigner(centroids: DataFrame):
     )
 
     def assign(
-        df: DataFrame,
-        idname: str,
-        vecname: str,
-        probes: int,
-        rank_col: str | None = None,
+        df: DataFrame, side: str, probes: int, rank_col: str | None = None
     ) -> DataFrame:
-        # any further columns of df (invfile metadata attributes) ride
-        # along untouched
+        # `side` names the id/vector columns (see _side); any further
+        # columns of df (invfile metadata attributes) ride along
+        idname, vecname = f"{side}_id", f"{side}_vec"
         others = [c for c in df.columns if c not in (idname, vecname)]
         # negated similarity so ascending struct sort = csim desc;
         # SQL-string construction (one parse) — see _kmeans_state
@@ -196,40 +321,26 @@ def _cell_assigner(centroids: DataFrame):
             + ", cast('-Infinity' as double)), cast(i as int))) "
             "as array<struct<ncs:double,idx:int>>)"
         )
-        base = df.crossJoin(F.broadcast(cstate))
-        if rank_col is None:
-            return base.select(
-                idname,
-                vecname,
-                *others,
-                "_cc",
-                F.explode(F.slice(F.array_sort(scored), 1, probes)).alias(
-                    "_t"
-                ),
-            ).select(
-                idname,
-                vecname,
-                *others,
-                F.get(F.col("_cc"), F.col("_t.idx")).alias("cid"),
-            )
+        top = F.slice(F.array_sort(scored), 1, probes)
         # rank_col exposes each probed cell's affinity rank (1-based):
         # the slice prefix of length n is EXACTLY the nprobe=n
         # assignment, so one max-probes pass serves a whole nprobe
         # sweep (ann_ivf_nprobe_curve) instead of one branch per point
-        return base.select(
-            idname,
-            vecname,
-            *others,
-            "_cc",
-            F.posexplode(F.slice(F.array_sort(scored), 1, probes)).alias(
-                "_p", "_t"
-            ),
-        ).select(
-            idname,
-            vecname,
-            *others,
-            F.get(F.col("_cc"), F.col("_t.idx")).alias("cid"),
-            (F.col("_p") + F.lit(1)).cast("int").alias(rank_col),
+        if rank_col is None:
+            gen, rank = F.explode(top).alias("_t"), []
+        else:
+            gen = F.posexplode(top).alias("_p", "_t")
+            rank = [(F.col("_p") + F.lit(1)).cast("int").alias(rank_col)]
+        return (
+            df.crossJoin(F.broadcast(cstate))
+            .select(idname, vecname, *others, "_cc", gen)
+            .select(
+                idname,
+                vecname,
+                *others,
+                F.get(F.col("_cc"), F.col("_t.idx")).alias("cid"),
+                *rank,
+            )
         )
 
     return assign
@@ -291,10 +402,8 @@ def ivf_build_index(
     dim: int = 64,
     meta_cols: tuple[str, ...] = (),
 ) -> None:
-    """Build the COMPLETE IVF index artifact at `path` — centroids at
-    `{path}/centroids` AND the inverted file itself at
-    `{path}/invfile` ((cid, nbr_id, nbr_vec), hive-partitioned by
-    cid).
+    """Build the COMPLETE IVF index artifact at `path` — centroids AND
+    the inverted file itself.
 
     Persisting only the centroids is NOT enough at scale: the
     dominant IVF cost is the full-corpus CELL-ASSIGNMENT pass
@@ -306,10 +415,8 @@ def ivf_build_index(
     paid here once per rebuild cadence. Serving
     (`ivf_topk_from_index`) then only assigns the QUERY batch and
     equi-joins on cid — and the cid partitioning lets dynamic
-    partition pruning skip every unprobed cell's files. Parquet
-    round-trips doubles exactly, so artifact-served results are
-    bit-identical to in-query training. Rebuild on corpus change /
-    recall regression (see `ann_ivf_recall`).
+    partition pruning skip every unprobed cell's files. Rebuild on
+    corpus change / recall regression (see `ann_ivf_recall`).
 
     ``meta_cols`` names FILTERABLE attribute columns of the corpus
     (label, lang, source, quality tier …) to carry INTO the inverted
@@ -320,10 +427,6 @@ def ivf_build_index(
     and at 100 TB the filter prunes row groups inside each probed
     cell's files. This is how production vector stores handle
     attribute filters: the attributes live in the index."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
     cents = train_ivf_centroids(
         corpus,
         n_centroids=n_centroids,
@@ -334,48 +437,10 @@ def ivf_build_index(
         dim=dim,
     ).localCheckpoint()
     sinks.write_parquet(cents, posixpath.join(path, "centroids"))
-    assign = _cell_assigner(cents)
-    cells = assign(
-        fan_out(corpus).select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-            *[F.col(c) for c in meta_cols],
-        ),
-        "nbr_id",
-        "nbr_vec",
-        1,
-    )
-    # repartition BY CID before the partitioned write: without it every
-    # write task fans out a file into every cell directory (tasks ×
-    # nlist tiny files); with it each cell's vectors coalesce into its
-    # own file(s) — the contiguous inverted-list layout serving scans
-    sinks.write_parquet(
-        cells.select(
-            "cid", "nbr_id", "nbr_vec", *meta_cols
-        ).repartition(F.col("cid")),
+    corpus_side = _side(fan_out(corpus), "nbr", id_col, vec_col, *meta_cols)
+    _write_cells(
+        _cell_assigner(cents)(corpus_side, "nbr", 1),
         posixpath.join(path, "invfile"),
-        partition_by=["cid"],
-    )
-
-
-def _ivf_rank(q_assigned: DataFrame, cells: DataFrame, k: int) -> DataFrame:
-    """Shared IVF serve core: probed-cell equi-join + exact cosine +
-    per-query top-k (ties on nbr_id). `cells` = (cid, nbr_id, nbr_vec)
-    from either the in-query assignment or a persisted inverted file."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("nbr_id")
-    )
-    return (
-        q_assigned.join(cells, "cid")
-        .filter(F.col("nbr_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("query_vec"), F.col("nbr_vec")))
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "nbr_id", F.round("cosine", 9).alias("cosine"), "rk"
-        )
     )
 
 
@@ -389,10 +454,8 @@ def ivf_topk_from_index(
     vec_col: str = "embedding",
     where: Column | None = None,
 ) -> DataFrame:
-    """Serve IVF top-k from an `ivf_build_index` artifact: assign the
-    QUERY batch to its nprobe cells (broadcast one-row centroid state)
-    and equi-join the persisted inverted file on cid — per-query work
-    is O(nprobe·N/nlist) scoring, with NO full-corpus pass of any
+    """Serve IVF top-k from an `ivf_build_index` artifact: per-query
+    work is O(nprobe·N/nlist) scoring, with NO full-corpus pass of any
     kind; the cid hive-partitioning makes unprobed cells prunable at
     the scan.
 
@@ -402,52 +465,12 @@ def ivf_topk_from_index(
     filter (pinned in tests/test_plans.py) and prunes row groups
     inside each probed cell — candidates are filtered BEFORE ranking,
     and top-k ranks among the vectors that satisfy the predicate."""
-    import posixpath
-
-    cents = spark.read.parquet(posixpath.join(path, "centroids"))
-    inv = spark.read.parquet(posixpath.join(path, "invfile"))
-    if where is not None:
-        inv = inv.filter(where)
-    cells = inv.select(F.col("cid").cast("long"), "nbr_id", "nbr_vec")
-    assign = _cell_assigner(cents)
-    q = assign(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("query_vec"),
-        ),
-        "query_id",
-        "query_vec",
-        nprobe,
+    assign = _cell_assigner(_read(spark, path, "centroids"))
+    return _serve(
+        assign(_side(queries, "query", id_col, vec_col), "query", nprobe),
+        _stored(spark, path, "invfile", "nbr_vec", where=where),
+        k,
     )
-    return _ivf_rank(q, cells, k)
-
-
-def ivf_probed_cells(
-    spark,
-    path: str,
-    queries: DataFrame,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, cid) — the cells a query batch would probe against a
-    persisted IVF artifact at a given nprobe: the capacity-planning
-    relation behind the nprobe/recall operating curve
-    (`ann_ivf_nprobe_curve`). Broadcast one-row centroid state, map-
-    only over the batch — never touches the inverted file."""
-    import posixpath
-
-    cents = spark.read.parquet(posixpath.join(path, "centroids"))
-    assign = _cell_assigner(cents)
-    return assign(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("query_vec"),
-        ),
-        "query_id",
-        "query_vec",
-        nprobe,
-    ).select("query_id", "cid")
 
 
 def ivf_append_to_index(
@@ -461,16 +484,16 @@ def ivf_append_to_index(
 ) -> None:
     """INCREMENTAL index maintenance: fold a new vector batch into a
     persisted `ivf_build_index` artifact using the artifact's FROZEN
-    centroids — assign only the batch (broadcast one-row centroid
-    state, map-only) and APPEND its rows to the cid-partitioned
-    inverted file. The quantizer is NOT retrained: this is the path a
-    continuously-ingesting corpus runs between periodic retrains (the
-    same append-only discipline as `dedup.merge_fingerprint_state` —
-    per-batch cost depends on the BATCH, never on the index size), at
-    the price every production vector store pays for it: frozen
-    centroids drift from the data distribution as batches accumulate
-    (`ann_incremental_add_recall` measures exactly that drift, and a
-    recall regression there is the retrain signal).
+    centroids — encode only the batch and APPEND its rows to the
+    cid-partitioned inverted file. The quantizer is NOT retrained: this
+    is the path a continuously-ingesting corpus runs between periodic
+    retrains (the same append-only discipline as
+    `dedup.merge_fingerprint_state` — per-batch cost depends on the
+    BATCH, never on the index size), at the price every production
+    vector store pays for it: frozen centroids drift from the data
+    distribution as batches accumulate (`ann_incremental_add_recall`
+    measures exactly that drift, and a recall regression there is the
+    retrain signal).
 
     ``ingest_key`` makes the append IDEMPOTENT per key: the batch is
     staged with mode=overwrite (itself replay-safe), then each cell's
@@ -487,77 +510,54 @@ def ivf_append_to_index(
     Serving needs no new code: `ivf_topk_from_index` reads the invfile
     directory, so appended cells' files are discovered like built
     ones, and results are identical to an index whose BUILD had seen
-    the appended vectors with the same centroids. A real deployment
-    appends under a table format's transaction or keys appends by
-    batch id (``ingest_key``). Compaction of the accumulated small per-batch
-    files is the maintenance half: `compact_index_relation` rewrites
-    the relation to one file per cell with serving provably invariant
-    (`ann_ivf_compacted_topk` shares this loop's un-compacted
-    oracle)."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
-    cents = spark.read.parquet(posixpath.join(path, "centroids"))
-    assign = _cell_assigner(cents)
-    cells = assign(
-        fan_out(batch).select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-            *[F.col(c) for c in meta_cols],
-        ),
-        "nbr_id",
-        "nbr_vec",
-        1,
-    )
-    # same repartition-by-cid rationale as the build: each touched
-    # cell's new vectors coalesce into one appended file, not one per
-    # write task
-    out = cells.select("cid", "nbr_id", "nbr_vec", *meta_cols).repartition(
-        F.col("cid")
-    )
+    the appended vectors with the same centroids. Compaction of the
+    accumulated small per-batch files is the maintenance half:
+    `compact_index_relation` rewrites the relation to one file per
+    cell with serving provably invariant (`ann_ivf_compacted_topk`
+    shares this loop's un-compacted oracle)."""
+    assign = _cell_assigner(_read(spark, path, "centroids"))
+    batch_side = _side(fan_out(batch), "nbr", id_col, vec_col, *meta_cols)
+    out = assign(batch_side, "nbr", 1)
     inv = posixpath.join(path, "invfile")
-    if ingest_key is not None:
-        import glob
-        import shutil
+    if ingest_key is None:
+        _write_cells(out, inv, mode="append")
+        return
+    import glob
+    import shutil
 
-        staging = posixpath.join(path, f"_ingest_{ingest_key}")
-        sinks.write_parquet(
-            out, staging, mode="overwrite", partition_by=["cid"]
-        )
-        # A replay must fully REPLACE this key's prior footprint, not
-        # just overwrite matching names: if the earlier attempt wrote
-        # more files in a cell (or touched a cell this attempt skips),
-        # the leftovers would duplicate rows. Sweep every
-        # ingest-<key>*.parquet across cells before moving staged files.
-        # exact-name patterns, not ingest-<key>*: a bare prefix glob
-        # would also sweep a DIFFERENT key that starts with this one
-        # (ingest-b1* matches ingest-b10.parquet).
-        for pat in (
-            f"ingest-{ingest_key}.parquet",
-            f"ingest-{ingest_key}-[0-9]*.parquet",
-        ):
-            for stale in glob.glob(posixpath.join(inv, "cid=*", pat)):
-                os.remove(stale)
-        # one task per cell (repartition by cid) -> exactly one staged
-        # file per cid dir; frozen centroids make the cid set itself
-        # deterministic for a given batch, so a replay regenerates and
-        # atomically replaces the SAME target names.
-        for cell_dir in sorted(glob.glob(posixpath.join(staging, "cid=*"))):
-            files = sorted(glob.glob(posixpath.join(cell_dir, "*.parquet")))
-            target_dir = posixpath.join(inv, posixpath.basename(cell_dir))
-            os.makedirs(target_dir, exist_ok=True)
-            for i, src in enumerate(files):
-                suffix = f"-{i}" if i else ""
-                os.replace(
-                    src,
-                    posixpath.join(
-                        target_dir, f"ingest-{ingest_key}{suffix}.parquet"
-                    ),
-                )
-        shutil.rmtree(staging)
-    else:
-        sinks.append(out, inv, partition_by=["cid"])
+    staging = posixpath.join(path, f"_ingest_{ingest_key}")
+    _write_cells(out, staging)
+    # A replay must fully REPLACE this key's prior footprint, not
+    # just overwrite matching names: if the earlier attempt wrote
+    # more files in a cell (or touched a cell this attempt skips),
+    # the leftovers would duplicate rows. Sweep every
+    # ingest-<key>*.parquet across cells before moving staged files.
+    # exact-name patterns, not ingest-<key>*: a bare prefix glob
+    # would also sweep a DIFFERENT key that starts with this one
+    # (ingest-b1* matches ingest-b10.parquet).
+    for pat in (
+        f"ingest-{ingest_key}.parquet",
+        f"ingest-{ingest_key}-[0-9]*.parquet",
+    ):
+        for stale in glob.glob(posixpath.join(inv, "cid=*", pat)):
+            os.remove(stale)
+    # one task per cell (repartition by cid) -> exactly one staged
+    # file per cid dir; frozen centroids make the cid set itself
+    # deterministic for a given batch, so a replay regenerates and
+    # atomically replaces the SAME target names.
+    for cell_dir in sorted(glob.glob(posixpath.join(staging, "cid=*"))):
+        files = sorted(glob.glob(posixpath.join(cell_dir, "*.parquet")))
+        target_dir = posixpath.join(inv, posixpath.basename(cell_dir))
+        os.makedirs(target_dir, exist_ok=True)
+        for i, src in enumerate(files):
+            suffix = f"-{i}" if i else ""
+            os.replace(
+                src,
+                posixpath.join(
+                    target_dir, f"ingest-{ingest_key}{suffix}.parquet"
+                ),
+            )
+    shutil.rmtree(staging)
 
 
 def ivfsq_append_to_index(
@@ -567,37 +567,20 @@ def ivfsq_append_to_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """`ivf_append_to_index`'s IVF-SQ twin: assign + SQ-encode the new
-    batch with the artifact's FROZEN centroids and FROZEN quantization
-    bounds, append to the cid-partitioned codes table. Frozen bounds
-    add a second drift surface beyond frozen centroids: an appended
-    vector whose component falls outside the trained [lo, hi] clamps
-    to the edge code (sq_encode's least/greatest), so out-of-range
-    drift degrades into saturation, not corruption — monitored by the
-    same recall-drift query as the centroids."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
-    cents = spark.read.parquet(posixpath.join(path, "centroids"))
-    bounds = spark.read.parquet(posixpath.join(path, "bounds"))
-    assign = _cell_assigner(cents)
-    cells = assign(
-        fan_out(batch).select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-        ),
-        "nbr_id",
-        "nbr_vec",
-        1,
-    )
-    codes = cells.join(F.broadcast(bounds)).select(
-        "cid", "nbr_id", _sq_codes_expr(F.col("nbr_vec")).alias("codes")
-    )
-    sinks.append(
-        codes.repartition(F.col("cid")),
+    """`ivf_append_to_index`'s IVF-SQ twin: encode the new batch with
+    the artifact's FROZEN centroids and FROZEN quantization bounds,
+    append to the cid-partitioned codes table. Frozen bounds add a
+    second drift surface beyond frozen centroids: an appended vector
+    whose component falls outside the trained [lo, hi] clamps to the
+    edge code (the encode's least/greatest), so out-of-range drift
+    degrades into saturation, not corruption — monitored by the same
+    recall-drift query as the centroids."""
+    assign = _cell_assigner(_read(spark, path, "centroids"))
+    batch_side = _side(fan_out(batch), "nbr", id_col, vec_col)
+    _write_cells(
+        _sq_encode(assign(batch_side, "nbr", 1), _read(spark, path, "bounds")),
         posixpath.join(path, "codes"),
-        partition_by=["cid"],
+        mode="append",
     )
 
 
@@ -609,37 +592,19 @@ def ivfpq_append_to_index(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> None:
-    """`ivf_append_to_index`'s IVF-PQ twin: assign + PQ-encode the new
-    batch with the artifact's FROZEN coarse centroids and FROZEN
-    codebooks, append to the cid-partitioned codes table. Both stages
-    are broadcast-state map work over the batch; the codebooks freeze
-    means appended vectors are quantized onto the original corpus's
-    codeword geometry — the ADC error grows with distribution drift,
-    which is the PQ-specific retrain signal."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
+    """`ivf_append_to_index`'s IVF-PQ twin: encode the new batch with
+    the artifact's FROZEN coarse centroids and FROZEN codebooks, append
+    to the cid-partitioned codes table. The codebooks freeze means
+    appended vectors are quantized onto the original corpus's codeword
+    geometry — the ADC error grows with distribution drift, which is
+    the PQ-specific retrain signal."""
     state, m, sub = _pq_serve_state(spark, path)
-    coarse = spark.read.parquet(posixpath.join(path, "coarse"))
-    assign = _cell_assigner(coarse)
-    enc = (
-        assign(
-            fan_out(batch).select(
-                F.col(id_col).alias("nbr_id"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
-            ),
-            "nbr_id",
-            "_v",
-            1,
-        )
-        .crossJoin(F.broadcast(state))
-        .select("cid", "nbr_id", *_pq_code_cols(m, sub))
-    )
-    sinks.append(
-        enc.repartition(F.col("cid")),
+    assign = _cell_assigner(_read(spark, path, "coarse"))
+    batch_side = _side(fan_out(batch), "nbr", id_col, vec_col)
+    _write_cells(
+        _pq_encode(assign(batch_side, "nbr", 1), state, m, sub),
         posixpath.join(path, "codes"),
-        partition_by=["cid"],
+        mode="append",
     )
 
 
@@ -653,71 +618,35 @@ def pq_build_index(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> None:
-    """Build the COMPLETE PQ index artifact: codebooks (one-row
-    `_cs{s}` state) at `{path}/codebooks` AND the encoded corpus
-    (nbr_id, code0..code{m-1}) at `{path}/codes` — the compressed
-    index itself (m small ints replace dim floats per vector; at
-    100 TB of raw embeddings the codes table is the ~1.5 TB relation
-    serving actually scans). Encoding is the full-corpus pass, so it
-    belongs to index BUILD, not to every query batch. The persisted
-    state also freezes the trained-codebook nondeterminism noted in
-    `pq_codebooks`: one training run, bit-stable artifact thereafter.
-    Serve with `pq_topk_from_index`."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
-    sub = dim // m
+    """Build the COMPLETE PQ index artifact: the codebooks AND the
+    encoded corpus — the compressed index itself (m small ints replace
+    dim floats per vector; at 100 TB of raw embeddings the codes table
+    is the ~1.5 TB relation serving actually scans). Encoding is the
+    full-corpus pass, so it belongs to index BUILD, not to every query
+    batch. The persisted state also freezes the trained-codebook
+    nondeterminism noted in `pq_codebooks`: one training run,
+    bit-stable artifact thereafter. Serve with `pq_topk_from_index`."""
     state = pq_codebooks(
         corpus, m=m, ks=ks, iters=iters,
         id_col=id_col, vec_col=vec_col, dim=dim,
     ).localCheckpoint()
     sinks.write_parquet(state, posixpath.join(path, "codebooks"))
-    encoded = (
-        fan_out(corpus)
-        .select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        .crossJoin(F.broadcast(state))
-        .select("nbr_id", *_pq_code_cols(m, sub))
+    sinks.write_parquet(
+        _pq_encode(
+            _side(fan_out(corpus), "nbr", id_col, vec_col), state, m, dim // m
+        ),
+        posixpath.join(path, "codes"),
     )
-    sinks.write_parquet(encoded, posixpath.join(path, "codes"))
 
 
 def _pq_serve_state(spark, path: str):
     """Read a PQ codebook artifact and derive (state, m, sub) — the
     subspace count from the `_cs{s}` column names, the subspace width
     from one codeword of the one-row state (a one-row collect)."""
-    import posixpath
-
-    state = spark.read.parquet(posixpath.join(path, "codebooks"))
+    state = _read(spark, path, "codebooks")
     m = len([c for c in state.columns if c.startswith("_cs")])
     sub = state.select(F.size(F.get("_cs0", 0))).first()[0]
     return state, m, sub
-
-
-def _pq_rank(encoded: DataFrame, qluts: DataFrame, m: int, k: int) -> DataFrame:
-    """Shared PQ serve core: broadcast the per-query LUTs onto the
-    codes relation, ADC-score (m array lookups per pair), per-query
-    top-k ascending with nbr_id ties."""
-    from pyspark.sql import Window
-
-    dist = _pq_adc_dist(m)
-    scored = (
-        encoded.join(
-            F.broadcast(qluts), F.col("nbr_id") != F.col("query_id")
-        )
-        .withColumn("adc_dist", dist)
-        .select("query_id", "nbr_id", "adc_dist")
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "nbr_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .withColumn("adc_dist", F.round("adc_dist", 9))
-        .select("query_id", "nbr_id", "adc_dist", "rk")
-    )
 
 
 def pq_topk_from_index(
@@ -731,21 +660,10 @@ def pq_topk_from_index(
     """Serve PQ ADC top-k from a `pq_build_index` artifact: the only
     corpus-sized input is the CODES table (m small ints + id per
     vector — no raw-vector scan, no encode pass); the query batch
-    computes its LUTs against the persisted codebooks and broadcasts
-    them."""
-    import posixpath
-
+    computes its LUTs against the persisted codebooks."""
     state, m, sub = _pq_serve_state(spark, path)
-    encoded = spark.read.parquet(posixpath.join(path, "codes"))
-    qluts = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-        )
-        .crossJoin(F.broadcast(state))
-        .select("query_id", *_pq_lut_cols(m, sub))
-    )
-    return _pq_rank(encoded, qluts, m, k)
+    luts = _pq_luts(_side(queries, "query", id_col, vec_col), state, m, sub)
+    return _serve(luts, _read(spark, path, "codes"), k, _pq_adc_dist(m))
 
 
 def ivfpq_build_index(
@@ -760,22 +678,16 @@ def ivfpq_build_index(
     dim: int = 64,
     meta_cols: tuple[str, ...] = (),
 ) -> None:
-    """Build the COMPLETE IVF-PQ index artifact: coarse centroids at
-    `{path}/coarse`, PQ codebooks at `{path}/codebooks`, and the
-    cell-assigned encoded corpus (cid, nbr_id, code0..code{m-1}) at
-    `{path}/codes` (hive-partitioned by cid — unprobed cells prune at
-    the scan). Both full-corpus passes (cell assignment + PQ encode)
-    are index-BUILD work; serving (`ivfpq_topk_from_index`) touches
-    only the query batch and the probed slices of the codes table.
+    """Build the COMPLETE IVF-PQ index artifact: coarse centroids, PQ
+    codebooks, and the cell-assigned encoded corpus (unprobed cells
+    prune at the scan). Both full-corpus passes (cell assignment + PQ
+    encode) are index-BUILD work; serving (`ivfpq_topk_from_index`)
+    touches only the query batch and the probed slices of the codes
+    table.
 
     ``meta_cols`` carries filterable attribute columns into the codes
     table (same contract as `ivf_build_index`) for
     `ivfpq_topk_from_index(where=…)` metadata-filtered search."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
-    sub = dim // m
     coarse = kmeans_centroids(
         corpus, k=n_centroids, iters=iters,
         id_col=id_col, vec_col=vec_col, dim=dim,
@@ -786,31 +698,10 @@ def ivfpq_build_index(
         id_col=id_col, vec_col=vec_col, dim=dim,
     ).localCheckpoint()
     sinks.write_parquet(state, posixpath.join(path, "codebooks"))
-    assign = _cell_assigner(coarse)
-    enc = (
-        assign(
-            fan_out(corpus).select(
-                F.col(id_col).alias("nbr_id"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
-                *[F.col(c) for c in meta_cols],
-            ),
-            "nbr_id",
-            "_v",
-            1,
-        )
-        .crossJoin(F.broadcast(state))
-        .select(
-            "cid",
-            "nbr_id",
-            *_pq_code_cols(m, sub),
-            *[F.col(c) for c in meta_cols],
-        )
-    )
-    # same repartition-by-cid rationale as the IVF inverted file
-    sinks.write_parquet(
-        enc.repartition(F.col("cid")),
-        posixpath.join(path, "codes"),
-        partition_by=["cid"],
+    corpus_side = _side(fan_out(corpus), "nbr", id_col, vec_col, *meta_cols)
+    assigned = _cell_assigner(coarse)(corpus_side, "nbr", 1)
+    _write_cells(
+        _pq_encode(assigned, state, m, dim // m), posixpath.join(path, "codes")
     )
 
 
@@ -824,54 +715,28 @@ def ivfpq_topk_from_index(
     vec_col: str = "embedding",
     where: Column | None = None,
 ) -> DataFrame:
-    """Serve IVF-PQ from an `ivfpq_build_index` artifact: assign the
-    query batch to nprobe cells (persisted coarse centroids), compute
-    its LUTs (persisted codebooks), equi-join the probed slices of the
-    persisted codes table on cid, ADC-score — per-query cost
-    O(nprobe/nlist · N) array lookups over the compressed index, with
-    zero full-corpus passes at serve time.
+    """Serve IVF-PQ from an `ivfpq_build_index` artifact: per-query
+    cost O(nprobe/nlist · N) array lookups over the compressed index,
+    with zero full-corpus passes at serve time.
 
     ``where`` (over `meta_cols` attributes) filters the codes scan
     BEFORE ADC scoring — same pushed-filter contract as
     `ivf_topk_from_index(where=…)`."""
-    import posixpath
-
-    from pyspark.sql import Window
-
     state, m, sub = _pq_serve_state(spark, path)
-    coarse = spark.read.parquet(posixpath.join(path, "coarse"))
-    codes = spark.read.parquet(posixpath.join(path, "codes"))
-    if where is not None:
-        codes = codes.filter(where)
-    enc = codes.select(
-        F.col("cid").cast("long"),
-        "nbr_id",
-        *[f"code{s}" for s in range(m)],
-    )
-    assign = _cell_assigner(coarse)
-    qluts = (
-        assign(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).cast("array<double>").alias("_qv"),
-            ),
-            "query_id",
-            "_qv",
-            nprobe,
-        )
-        .crossJoin(F.broadcast(state))
-        .select("query_id", "cid", *_pq_lut_cols(m, sub))
-    )
-    dist = _pq_adc_dist(m)
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "nbr_id")
-    return (
-        qluts.join(enc, "cid")
-        .filter(F.col("nbr_id") != F.col("query_id"))
-        .withColumn("adc_dist", dist)
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .withColumn("adc_dist", F.round("adc_dist", 9))
-        .select("query_id", "nbr_id", "adc_dist", "rk")
+    assign = _cell_assigner(_read(spark, path, "coarse"))
+    q = assign(_side(queries, "query", id_col, vec_col), "query", nprobe)
+    codes = _stored(spark, path, "codes", *_pq_code_names(m), where=where)
+    return _serve(_pq_luts(q, state, m, sub), codes, k, _pq_adc_dist(m))
+
+
+def _residual(assigned: DataFrame, coarse: DataFrame, side: str) -> DataFrame:
+    """Residual IVF-PQ rows: each assigned vector minus the centroid of
+    its cell — the corpus side once per vector, the query side once per
+    probed cell."""
+    vec = f"{side}_vec"
+    cents = coarse.select("cid", F.col("cvec").cast("array<double>").alias("_cv"))
+    return assigned.join(F.broadcast(cents), "cid").select(
+        f"{side}_id", "cid", F.zip_with(vec, "_cv", lambda x, y: x - y).alias(vec)
     )
 
 
@@ -895,60 +760,26 @@ def ivfpq_residual_build_index(
     the no-residual codes at identical index size
     (`ann_ivfpq_residual_recall` vs `ann_ivfpq_recall`).
 
-    Artifact layout mirrors `ivfpq_build_index` (`coarse/`,
-    `codebooks/`, cid-partitioned `codes/`); both full-corpus passes
-    (assignment and residual encode) are build work. Codebooks are
-    TRAINED on the residual relation (same joint-Lloyd machinery —
+    Artifact layout mirrors `ivfpq_build_index`; both full-corpus
+    passes (assignment and residual encode) are build work. Codebooks
+    are TRAINED on the residual relation (same joint-Lloyd machinery —
     `pq_codebooks` is corpus-agnostic)."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
-    sub = dim // m
     coarse = kmeans_centroids(
         corpus, k=n_centroids, iters=iters,
         id_col=id_col, vec_col=vec_col, dim=dim,
     ).localCheckpoint()
     sinks.write_parquet(coarse, posixpath.join(path, "coarse"))
-    assign = _cell_assigner(coarse)
-    assigned = assign(
-        fan_out(corpus).select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("_raw"),
-        ),
-        "nbr_id",
-        "_raw",
-        1,
-    )
-    resid = (
-        assigned.join(
-            F.broadcast(
-                coarse.select(
-                    "cid", F.col("cvec").cast("array<double>").alias("_cv")
-                )
-            ),
-            "cid",
-        )
-        .select(
-            "cid",
-            "nbr_id",
-            F.zip_with("_raw", "_cv", lambda x, y: x - y).alias("_v"),
-        )
-        .localCheckpoint()
-    )
+    corpus_side = _side(fan_out(corpus), "nbr", id_col, vec_col)
+    resid = _residual(
+        _cell_assigner(coarse)(corpus_side, "nbr", 1), coarse, "nbr"
+    ).localCheckpoint()
     state = pq_codebooks(
         resid, m=m, ks=ks, iters=iters,
-        id_col="nbr_id", vec_col="_v", dim=dim,
+        id_col="nbr_id", vec_col="nbr_vec", dim=dim,
     ).localCheckpoint()
     sinks.write_parquet(state, posixpath.join(path, "codebooks"))
-    enc = (
-        resid.crossJoin(F.broadcast(state))
-        .select("cid", "nbr_id", *_pq_code_cols(m, sub))
-    )
-    sinks.write_parquet(
-        enc.repartition(F.col("cid")),
-        posixpath.join(path, "codes"),
-        partition_by=["cid"],
+    _write_cells(
+        _pq_encode(resid, state, m, dim // m), posixpath.join(path, "codes")
     )
 
 
@@ -961,62 +792,19 @@ def ivfpq_residual_topk_from_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Serve residual IVF-PQ (IVFADC): assign the query batch to its
-    nprobe cells, build the ADC lookup tables from the query's
-    PER-CELL RESIDUAL (q − that cell's centroid — the extra step the
-    no-residual variant skips; LUTs are per (query, cell), still
-    m·ks·nprobe doubles per query), and ADC-score the probed slices
-    of the persisted residual-codes table. Zero full-corpus passes at
+    """Serve residual IVF-PQ (IVFADC): the ADC lookup tables come from
+    the query's PER-CELL RESIDUAL (q − that cell's centroid — the extra
+    step the no-residual variant skips; LUTs are per (query, cell),
+    still m·ks·nprobe doubles per query). Zero full-corpus passes at
     serve time, same as the rest of the artifact-serving family."""
-    import posixpath
-
-    from pyspark.sql import Window
-
     state, m, sub = _pq_serve_state(spark, path)
-    coarse = spark.read.parquet(posixpath.join(path, "coarse"))
-    enc = spark.read.parquet(posixpath.join(path, "codes")).select(
-        F.col("cid").cast("long"),
-        "nbr_id",
-        *[f"code{s}" for s in range(m)],
+    coarse = _read(spark, path, "coarse")
+    q = _cell_assigner(coarse)(
+        _side(queries, "query", id_col, vec_col), "query", nprobe
     )
-    assign = _cell_assigner(coarse)
-    qa = assign(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_raw"),
-        ),
-        "query_id",
-        "_raw",
-        nprobe,
-    )
-    qluts = (
-        qa.join(
-            F.broadcast(
-                coarse.select(
-                    "cid", F.col("cvec").cast("array<double>").alias("_cv")
-                )
-            ),
-            "cid",
-        )
-        .select(
-            "query_id",
-            "cid",
-            F.zip_with("_raw", "_cv", lambda x, y: x - y).alias("_qv"),
-        )
-        .crossJoin(F.broadcast(state))
-        .select("query_id", "cid", *_pq_lut_cols(m, sub))
-    )
-    dist = _pq_adc_dist(m)
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "nbr_id")
-    return (
-        qluts.join(enc, "cid")
-        .filter(F.col("nbr_id") != F.col("query_id"))
-        .withColumn("adc_dist", dist)
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .withColumn("adc_dist", F.round("adc_dist", 9))
-        .select("query_id", "nbr_id", "adc_dist", "rk")
-    )
+    luts = _pq_luts(_residual(q, coarse, "query"), state, m, sub)
+    codes = _stored(spark, path, "codes", *_pq_code_names(m))
+    return _serve(luts, codes, k, _pq_adc_dist(m))
 
 
 def ivfpq_rerank_topk_from_index(
@@ -1048,33 +836,18 @@ def ivfpq_rerank_topk_from_index(
     are sized with the corpus (measured: the merge variant cost ~40%
     more at the 100x tier with no safety gain at reachable sizes);
     the query batch broadcasts onto its candidates."""
-    from pyspark.sql import Window
-
     cand = ivfpq_topk_from_index(
         spark, path, queries, nprobe=nprobe, k=k * rerank,
         id_col=id_col, vec_col=vec_col,
     ).select("query_id", "nbr_id")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("query_vec"),
-    )
-    v = vectors.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("nbr_id")
-    )
-    return (
+    v = _side(vectors, "nbr", id_col, vec_col)
+    q = _side(queries, "query", id_col, vec_col)
+    scored = (
         cand.join(v.hint("shuffle_hash"), "nbr_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", cosine(F.col("query_vec"), F.col("nbr_vec")))
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id", "nbr_id", F.round("cosine", 9).alias("cosine"), "rk"
-        )
+        .withColumn("cosine", _cosine_score())
     )
+    return _topk(scored, "cosine", k, descending=True)
 
 
 def ivf_topk(
@@ -1140,26 +913,9 @@ def ivf_topk(
             # `ivf_build_index` + `centroids=` instead.
             centroids = centroids.localCheckpoint()
     assign = _cell_assigner(centroids)
-
-    c = assign(
-        fan_out(corpus).select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-        ),
-        "nbr_id",
-        "nbr_vec",
-        1,
-    )
-    q = assign(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("query_vec"),
-        ),
-        "query_id",
-        "query_vec",
-        nprobe,
-    )
-    return _ivf_rank(q, c, k)
+    cells = assign(_side(fan_out(corpus), "nbr", id_col, vec_col), "nbr", 1)
+    q = assign(_side(queries, "query", id_col, vec_col), "query", nprobe)
+    return _serve(q, cells, k)
 
 
 def _sq_l2_sql(a: str, b: str) -> str:
@@ -1421,29 +1177,37 @@ def pq_codebooks(
     return state
 
 
-def _pq_code_cols(m: int, sub: int) -> list[Column]:
-    """Per-subspace code columns (argmin against broadcast codebook
-    `_cs{s}`) over the corpus vector column `_v` — the ONE copy of the
-    encode expression shared by `pq_topk` and `ivfpq_topk`."""
-    return [
+def _pq_code_names(m: int) -> list[str]:
+    return [f"code{s}" for s in range(m)]
+
+
+def _pq_encode(rel: DataFrame, state: DataFrame, m: int, sub: int) -> DataFrame:
+    """PQ encode: per subspace, the argmin codeword of the corpus
+    vector's slice against the broadcast codebook `_cs{s}` — one
+    map-only projection computes all m codes per row."""
+    codes = [
         F.expr(
-            _argmin_code_sql(f"slice(_v, {s * sub + 1}, {sub})", f"_cs{s}")
-        ).alias(f"code{s}")
-        for s in range(m)
+            _argmin_code_sql(f"slice(nbr_vec, {s * sub + 1}, {sub})", f"_cs{s}")
+        ).alias(name)
+        for s, name in enumerate(_pq_code_names(m))
     ]
+    return rel.crossJoin(F.broadcast(state)).select(*_layout(rel, *codes))
 
 
-def _pq_lut_cols(m: int, sub: int) -> list[Column]:
-    """Per-subspace lookup tables over the query vector column `_qv`:
-    the ks squared-L2s from the query slice to every codeword."""
-    return [
+def _pq_luts(q: DataFrame, state: DataFrame, m: int, sub: int) -> DataFrame:
+    """Per-subspace lookup tables of a query batch: the ks squared-L2s
+    from the query slice to every codeword (m·ks doubles per query, or
+    per probed cell when the batch carries cids)."""
+    luts = [
         F.expr(
             f"transform(_cs{s}, c -> "
-            + _sq_l2_sql(f"slice(_qv, {s * sub + 1}, {sub})", "c")
+            + _sq_l2_sql(f"slice(query_vec, {s * sub + 1}, {sub})", "c")
             + ")"
         ).alias(f"_lut{s}")
         for s in range(m)
     ]
+    keys = [c for c in ("query_id", "cid") if c in q.columns]
+    return q.crossJoin(F.broadcast(state)).select(*keys, *luts)
 
 
 def _pq_adc_dist(m: int) -> Column:
@@ -1464,11 +1228,8 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization ANN: asymmetric-distance (ADC) top-k.
-    Pass `codebooks` (the one-row `_cs{s}` state from `pq_build_index`)
-    to serve from a persisted artifact instead of training in-query.
 
     The memory end of the ANN design space. IVF prunes WHICH vectors a
     query touches; PQ shrinks WHAT is stored per vector: m codes of
@@ -1477,59 +1238,34 @@ def pq_topk(
     between an in-memory index and re-scanning parquet per query).
     Composable with IVF (IVF-PQ) — this operator isolates the PQ leg.
 
-    Plan shape, all broadcast-state:
-    1. `pq_codebooks` — the m Lloyd problems trained jointly, one
-       corpus shuffle per round.
-    2. Encode: ONE map-only projection computes all m codes per corpus
-       row (argmin over a broadcast codebook each — no join, no
-       shuffle; this projection IS the compressed index build).
-    3. Query LUTs: per query and subspace, the ks squared-L2s from the
-       query's slice to every codeword — m·ks doubles per query,
-       computed once on the (tiny, broadcast) query side. That
-       asymmetry is ADC: the query stays full-precision, only corpus
-       vectors are quantized.
-    4. Score: broadcast-nested-loop corpus_codes × query LUTs;
-       dist = Σ_s lut_s[code_s] — m array lookups per pair, NO
-       per-pair distance arithmetic. Top-k per query by the window,
-       ties on nbr_id; ADC distances are exactly reproducible (fold
-       order pinned), so ranking is cross-engine deterministic.
+    Train is `pq_codebooks` (the m Lloyd problems trained jointly, one
+    corpus shuffle per round); encode is one map-only projection (no
+    join, no shuffle — it IS the compressed index build); serve
+    computes the query LUTs once on the (tiny, broadcast) query side —
+    that asymmetry is ADC: the query stays full-precision, only corpus
+    vectors are quantized — and scores each pair with m array lookups,
+    NO per-pair distance arithmetic. ADC distances are exactly
+    reproducible (fold order pinned), so ranking is cross-engine
+    deterministic.
 
-    Self-pairs are excluded by id. `adc_dist` is the QUANTIZED squared
-    L2 — an estimate; rank quality degrades gracefully with ks, which
-    is the PQ trade. Output: (query_id, nbr_id, adc_dist, rk).
+    `adc_dist` is the QUANTIZED squared L2 — an estimate; rank quality
+    degrades gracefully with ks, which is the PQ trade. Output:
+    (query_id, nbr_id, adc_dist, rk).
     """
-    from pyspark.sql import Window
-
     sub = dim // m
     # the trained state is ONE row (m·ks·dim/m doubles); localCheckpoint
     # materializes the Lloyd chain once instead of once per consumer
     # branch (encode + LUTs). On a cluster this is the "persist the
     # trained codebooks as an index artifact" step — done for real by
-    # pq_build_index + the codebooks parameter.
-    state = codebooks
-    if state is None:
-        state = pq_codebooks(
-            corpus, m=m, ks=ks, iters=iters,
-            id_col=id_col, vec_col=vec_col, dim=dim,
-        ).localCheckpoint()
-
-    encoded = (
-        fan_out(corpus)
-        .select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        .crossJoin(F.broadcast(state))
-        .select("nbr_id", *_pq_code_cols(m, sub))
-    )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    ).crossJoin(F.broadcast(state))
-
-    qluts = q.select("query_id", *_pq_lut_cols(m, sub))
-    return _pq_rank(encoded, qluts, m, k)
+    # pq_build_index + pq_topk_from_index.
+    state = pq_codebooks(
+        corpus, m=m, ks=ks, iters=iters,
+        id_col=id_col, vec_col=vec_col, dim=dim,
+    ).localCheckpoint()
+    corpus_side = _side(fan_out(corpus), "nbr", id_col, vec_col)
+    codes = _pq_encode(corpus_side, state, m, sub)
+    luts = _pq_luts(_side(queries, "query", id_col, vec_col), state, m, sub)
+    return _serve(luts, codes, k, _pq_adc_dist(m))
 
 
 def ivfpq_topk(
@@ -1567,18 +1303,10 @@ def ivfpq_topk(
     one shared PQ codebook set serves every cell, which keeps the
     codebooks reusable index artifacts and the oracle exactly
     composable. Cell affinity is cosine (matching `ivf_topk`); scoring
-    inside probed cells is ADC squared-L2 (matching `pq_topk`), ranked
-    ascending with nbr_id ties.
-
-    Plan: coarse k-means (broadcast one-row state) → map-only cell
-    assignment for corpus (1 cell) and queries (nprobe cells) →
-    map-only PQ encode of the corpus → equi-join on cell id with
-    per-query LUTs riding the (tiny) query side → windowed top-k.
+    inside probed cells is ADC squared-L2 (matching `pq_topk`).
     No all-pairs stage anywhere; the only data-sized shuffles are the
     Lloyd-round aggregates and the final cell equi-join.
     """
-    from pyspark.sql import Window
-
     sub = dim // m
     if coarse is None:
         coarse = kmeans_centroids(
@@ -1586,50 +1314,16 @@ def ivfpq_topk(
             id_col=id_col, vec_col=vec_col, dim=dim,
         )
     assign = _cell_assigner(coarse)
-
     state = codebooks
     if state is None:
         state = pq_codebooks(
             corpus, m=m, ks=ks, iters=iters,
             id_col=id_col, vec_col=vec_col, dim=dim,
         ).localCheckpoint()
-    enc = (
-        assign(
-            fan_out(corpus).select(
-                F.col(id_col).alias("nbr_id"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
-            ),
-            "nbr_id",
-            "_v",
-            1,
-        )
-        .crossJoin(F.broadcast(state))
-        .select("nbr_id", "cid", *_pq_code_cols(m, sub))
-    )
-
-    q = assign(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-        ),
-        "query_id",
-        "_qv",
-        nprobe,
-    ).crossJoin(F.broadcast(state))
-
-    qluts = q.select("query_id", "cid", *_pq_lut_cols(m, sub))
-
-    dist = _pq_adc_dist(m)
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "nbr_id")
-    return (
-        qluts.join(enc, "cid")
-        .filter(F.col("nbr_id") != F.col("query_id"))
-        .withColumn("adc_dist", dist)
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .withColumn("adc_dist", F.round("adc_dist", 9))
-        .select("query_id", "nbr_id", "adc_dist", "rk")
-    )
+    corpus_side = _side(fan_out(corpus), "nbr", id_col, vec_col)
+    codes = _pq_encode(assign(corpus_side, "nbr", 1), state, m, sub)
+    q = assign(_side(queries, "query", id_col, vec_col), "query", nprobe)
+    return _serve(_pq_luts(q, state, m, sub), codes, k, _pq_adc_dist(m))
 
 
 def kmeans_assign(
@@ -2178,26 +1872,21 @@ def sq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Encode each vector to `dim` uniform 8-bit codes: code_i =
-    floor((x_i - min_i) / (max_i - min_i) · 256), clamped to [0, 255]
-    (x_i = max_i lands at 256 and clamps). Map-only over the corpus —
-    the one full pass SQ build pays. 4× compression at dim float32 →
-    dim bytes (the codes travel as ints here; a production sink packs
-    them into a `binary` column — the plumbing, not the math)."""
-    c = corpus.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    return c.join(F.broadcast(bounds)).select(
-        "nbr_id", _sq_codes_expr(F.col("_v")).alias("codes")
-    )
+    """Encode each vector to `dim` uniform 8-bit codes → (nbr_id,
+    codes): code_i = floor((x_i - min_i) / (max_i - min_i) · 256),
+    clamped to [0, 255] (x_i = max_i lands at 256 and clamps). Map-only
+    over the corpus — the one full pass SQ build pays. 4× compression
+    at dim float32 → dim bytes (the codes travel as ints here; a
+    production sink packs them into a `binary` column — the plumbing,
+    not the math)."""
+    return _sq_encode(_side(corpus, "nbr", id_col, vec_col), bounds)
 
 
-def _sq_codes_expr(v: Column) -> Column:
-    """SQ8 code array for a double-vector column, against broadcast
-    `mins`/`maxs` bounds columns in scope."""
-    return F.transform(
-        v,
+def _sq_encode(rel: DataFrame, bounds: DataFrame) -> DataFrame:
+    """SQ8 encode of the corpus rows of `rel` against the broadcast
+    one-row bounds (the formula in `sq_encode`)."""
+    codes = F.transform(
+        "nbr_vec",
         lambda x, i: F.when(
             F.get("maxs", i) == F.get("mins", i), F.lit(0)
         )
@@ -2213,18 +1902,29 @@ def _sq_codes_expr(v: Column) -> Column:
         )
         .cast("int"),
     )
+    return rel.join(F.broadcast(bounds)).select(
+        *_layout(rel, codes.alias("codes"))
+    )
 
 
-def _sq_reconstruct() -> Column:
-    """Midpoint decode of an SQ8 codes array against broadcast bounds
-    columns: recon_i = min_i + (code_i + 0.5) · (max_i - min_i) / 256."""
-    return F.transform(
+def _sq_decode(codes: DataFrame, bounds: DataFrame) -> DataFrame:
+    """Midpoint decode of stored SQ8 codes against the broadcast bounds
+    into the corpus side's nbr_vec: recon_i = min_i + (code_i + 0.5) ·
+    (max_i - min_i) / 256."""
+    recon = F.transform(
         F.col("codes"),
         lambda cd, i: F.get("mins", i)
         + (cd + F.lit(0.5))
         * (F.get("maxs", i) - F.get("mins", i))
         / F.lit(256.0),
     )
+    return codes.join(F.broadcast(bounds)).select(
+        *_keys(codes), recon.alias("nbr_vec")
+    )
+
+
+def _sq_adc() -> Column:
+    return _sq_l2(F.col("query_vec"), F.col("nbr_vec"))
 
 
 def sq_topk(
@@ -2244,37 +1944,12 @@ def sq_topk(
     for; compose with the IVF cell join when compute must shrink too.
     Per-dim fidelity is far higher than PQ at the same budget when dim
     is small; see `ann_sq_recall` for the measured number."""
-    from pyspark.sql import Window
-
     # the one-row bounds aggregate feeds the encode projection AND
     # the reconstruction broadcast — cut it so the corpus pass runs once
     bounds = sq_bounds(corpus, dim, vec_col).localCheckpoint()
     codes = sq_encode(corpus, bounds, id_col, vec_col)
-    recon = (
-        fan_out(codes)
-        .join(F.broadcast(bounds))
-        .select("nbr_id", _sq_reconstruct().alias("_rv"))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
-    scored = recon.join(
-        F.broadcast(q), F.col("nbr_id") != F.col("query_id")
-    ).withColumn("adc_dist", _sq_l2(F.col("_qv"), F.col("_rv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("nbr_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round("adc_dist", 9).alias("adc_dist"),
-            "rk",
-        )
-    )
+    q = _side(queries, "query", id_col, vec_col)
+    return _serve(q, _sq_decode(codes, bounds), k, _sq_adc())
 
 
 def sq_build_index(
@@ -2284,16 +1959,11 @@ def sq_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Persist the complete SQ8 artifact: the one-row bounds state at
-    `{path}/bounds` and the encoded corpus at `{path}/codes` — the 4×-
-    compressed relation serving actually scans. The encode pass is the
-    one full-corpus cost and belongs to BUILD; serving never touches
-    raw vectors (same artifact-is-the-index rule as the IVF/PQ
-    builders)."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
+    """Persist the complete SQ8 artifact: the one-row bounds state and
+    the encoded corpus — the 4×-compressed relation serving actually
+    scans. The encode pass is the one full-corpus cost and belongs to
+    BUILD; serving never touches raw vectors (same
+    artifact-is-the-index rule as the IVF/PQ builders)."""
     bounds = sq_bounds(corpus, dim, vec_col).localCheckpoint()
     sinks.write_parquet(bounds, posixpath.join(path, "bounds"))
     sinks.write_parquet(
@@ -2310,68 +1980,16 @@ def sq_topk_from_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Serve SQ8 ADC top-k from the persisted artifact: broadcast the
-    one-row bounds, reconstruct + score the codes scan — zero
-    training, zero raw-vector reads at query time. Bit-identical to
-    `sq_topk` (same decode, same fold), so it shares its oracle."""
-    import posixpath
-
-    from pyspark.sql import Window
-
-    bounds = spark.read.parquet(posixpath.join(path, "bounds"))
-    codes = spark.read.parquet(posixpath.join(path, "codes"))
-    recon = codes.join(F.broadcast(bounds)).select(
-        "nbr_id", _sq_reconstruct().alias("_rv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
-    scored = recon.join(
-        F.broadcast(q), F.col("nbr_id") != F.col("query_id")
-    ).withColumn("adc_dist", _sq_l2(F.col("_qv"), F.col("_rv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("nbr_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round("adc_dist", 9).alias("adc_dist"),
-            "rk",
-        )
-    )
+    """Serve SQ8 ADC top-k from the persisted artifact — zero training,
+    zero raw-vector reads at query time. Bit-identical to `sq_topk`
+    (same decode, same fold), so it shares its oracle."""
+    recon = _sq_decode(_read(spark, path, "codes"), _read(spark, path, "bounds"))
+    return _serve(_side(queries, "query", id_col, vec_col), recon, k, _sq_adc())
 
 
 # ---------------------------------------------------------------------------
 # IVF-SQ: coarse cells for candidate pruning × SQ8 codes for compression
 # ---------------------------------------------------------------------------
-
-
-def _ivfsq_rank(q_assigned: DataFrame, recon: DataFrame, k: int) -> DataFrame:
-    """Shared IVF-SQ serve core: probed-cell equi-join + squared-L2 ADC
-    over midpoint-reconstructed SQ8 codes + per-query top-k (ADC asc,
-    ties on nbr_id — the IVF-PQ ranking convention)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("nbr_id")
-    )
-    return (
-        q_assigned.join(recon, "cid")
-        .filter(F.col("nbr_id") != F.col("query_id"))
-        .withColumn("adc_dist", _sq_l2(F.col("query_vec"), F.col("_rv")))
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round("adc_dist", 9).alias("adc_dist"),
-            "rk",
-        )
-    )
 
 
 def ivfsq_topk(
@@ -2405,35 +2023,10 @@ def ivfsq_topk(
     ).localCheckpoint()
     bounds = sq_bounds(corpus, dim, vec_col)
     assign = _cell_assigner(cents)
-    cells = assign(
-        fan_out(corpus).select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-        ),
-        "nbr_id",
-        "nbr_vec",
-        1,
-    )
-    recon = (
-        cells.join(F.broadcast(bounds))
-        .select(
-            "cid",
-            "nbr_id",
-            _sq_codes_expr(F.col("nbr_vec")).alias("codes"),
-        )
-        .join(F.broadcast(bounds))
-        .select("cid", "nbr_id", _sq_reconstruct().alias("_rv"))
-    )
-    q = assign(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("query_vec"),
-        ),
-        "query_id",
-        "query_vec",
-        nprobe,
-    )
-    return _ivfsq_rank(q, recon, k)
+    corpus_side = _side(fan_out(corpus), "nbr", id_col, vec_col)
+    codes = _sq_encode(assign(corpus_side, "nbr", 1), bounds)
+    q = assign(_side(queries, "query", id_col, vec_col), "query", nprobe)
+    return _serve(q, _sq_decode(codes, bounds), k, _sq_adc())
 
 
 def ivfsq_build_index(
@@ -2447,23 +2040,17 @@ def ivfsq_build_index(
     meta_cols: tuple[str, ...] = (),
 ) -> None:
     """Persist the complete IVF-SQ artifact: centroids, the one-row SQ
-    bounds, and the cell-assigned CODES table ((cid, nbr_id, codes),
-    hive-partitioned by cid, repartitioned by cid first so each cell's
-    codes coalesce into contiguous files). The artifact IS the index:
-    the full-corpus assignment + encode pass is build work, and what
-    serving scans is the 4×-compressed inverted file with unprobed
-    cells prunable at the parquet scan — the IO story of IVF and the
-    compression story of SQ, multiplied.
+    bounds, and the cell-assigned CODES table. The artifact IS the
+    index: the full-corpus assignment + encode pass is build work, and
+    what serving scans is the 4×-compressed inverted file with
+    unprobed cells prunable at the parquet scan — the IO story of IVF
+    and the compression story of SQ, multiplied.
 
     ``meta_cols`` carries filterable attribute columns into the codes
     table (same contract as `ivf_build_index`): metadata-filtered
     search then pushes its predicate down to the codes parquet scan
     (`ivfsq_topk_from_index(where=…)`) — filtered BEFORE decoding and
     ranking, pruning row groups inside each probed cell."""
-    import posixpath
-
-    from tugas_2_big_data_spark.sources import sinks
-
     cents = train_ivf_centroids(
         corpus,
         n_centroids=n_centroids,
@@ -2476,27 +2063,10 @@ def ivfsq_build_index(
     sinks.write_parquet(cents, posixpath.join(path, "centroids"))
     bounds = sq_bounds(corpus, dim, vec_col).localCheckpoint()
     sinks.write_parquet(bounds, posixpath.join(path, "bounds"))
-    assign = _cell_assigner(cents)
-    cells = assign(
-        fan_out(corpus).select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("nbr_vec"),
-            *[F.col(c) for c in meta_cols],
-        ),
-        "nbr_id",
-        "nbr_vec",
-        1,
-    )
-    codes = cells.join(F.broadcast(bounds)).select(
-        "cid",
-        "nbr_id",
-        _sq_codes_expr(F.col("nbr_vec")).alias("codes"),
-        *meta_cols,
-    )
-    sinks.write_parquet(
-        codes.repartition(F.col("cid")),
+    corpus_side = _side(fan_out(corpus), "nbr", id_col, vec_col, *meta_cols)
+    _write_cells(
+        _sq_encode(_cell_assigner(cents)(corpus_side, "nbr", 1), bounds),
         posixpath.join(path, "codes"),
-        partition_by=["cid"],
     )
 
 
@@ -2510,12 +2080,9 @@ def ivfsq_topk_from_index(
     vec_col: str = "embedding",
     where: Column | None = None,
 ) -> DataFrame:
-    """Serve IVF-SQ from the persisted artifact: assign only the query
-    batch (broadcast one-row centroid state), equi-join the probed
-    cells' code partitions, decode + ADC — no training, no assignment,
-    no encode, no raw-vector reads at query time. Bit-identical to
-    `ivfsq_topk` (parquet round-trips the doubles and int codes
-    exactly) — same oracle.
+    """Serve IVF-SQ from the persisted artifact — no training, no
+    assignment, no encode, no raw-vector reads at query time.
+    Bit-identical to `ivfsq_topk` — same oracle.
 
     ``where`` (over columns built in via `meta_cols`) is metadata-
     filtered search with the same contract as
@@ -2523,29 +2090,11 @@ def ivfsq_topk_from_index(
     read, so it reaches the parquet scan as a pushed filter and
     candidates are filtered BEFORE decode + ranking — top-k ranks
     among vectors satisfying the predicate."""
-    import posixpath
-
-    cents = spark.read.parquet(posixpath.join(path, "centroids"))
-    bounds = spark.read.parquet(posixpath.join(path, "bounds"))
-    codes = spark.read.parquet(posixpath.join(path, "codes"))
-    if where is not None:
-        codes = codes.filter(where)
-    recon = codes.join(F.broadcast(bounds)).select(
-        F.col("cid").cast("long"),
-        "nbr_id",
-        _sq_reconstruct().alias("_rv"),
-    )
-    assign = _cell_assigner(cents)
-    q = assign(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("query_vec"),
-        ),
-        "query_id",
-        "query_vec",
-        nprobe,
-    )
-    return _ivfsq_rank(q, recon, k)
+    assign = _cell_assigner(_read(spark, path, "centroids"))
+    q = assign(_side(queries, "query", id_col, vec_col), "query", nprobe)
+    codes = _read(spark, path, "codes", where)
+    recon = _sq_decode(codes, _read(spark, path, "bounds"))
+    return _serve(q, recon, k, _sq_adc())
 
 
 def standardized_norm_stats(
@@ -2790,7 +2339,6 @@ def compact_index_relation(
     layout (queries_training._ann_artifact_dir) gives each corpus
     version its own key, and a production deployment compacts under a
     table format's transaction — same caveat as the append itself."""
-    import posixpath
     import shutil
 
     rel = posixpath.join(path, relation)
@@ -2803,21 +2351,15 @@ def compact_index_relation(
         # sole surviving copy.
         os.rename(old, rel)
     df = spark.read.parquet(rel)
-    part_cols = [c for c in ("cid",) if c in df.columns]
-    if not part_cols:
-        # repartition(*[]) raises TypeError; a relation without the
-        # cell key has nothing to compact by — refuse loudly rather
-        # than rewrite it into an unpartitioned layout.
+    if "cid" not in df.columns:
+        # a relation without the cell key has nothing to compact by —
+        # refuse loudly rather than rewrite it into an unpartitioned
+        # layout.
         raise ValueError(
             f"relation {rel!r} has no 'cid' column; compact_index_relation "
             "only compacts cell-partitioned index relations"
         )
-    (
-        df.repartition(*[F.col(c) for c in part_cols])
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(tmp)
-    )
+    _write_cells(df, tmp)
     shutil.rmtree(old, ignore_errors=True)
     os.rename(rel, old)
     os.rename(tmp, rel)
@@ -2997,35 +2539,17 @@ def contrastive_pairs(
     picks are per-query windows over that stream. For full-corpus
     mining, run batches of queries through this or swap the scored
     relation for the IVF-served candidates; the contract is the same."""
-    from pyspark.sql import Window
-
-    c = fan_out(corpus).select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).cast("array<double>").alias("nv"),
-        F.col(label_col).alias("nlabel"),
+    c = _side(
+        fan_out(corpus), "nbr", id_col, vec_col, F.col(label_col).alias("nlabel")
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        F.col(label_col).alias("qlabel"),
-    )
-    scored = c.join(F.broadcast(q), F.col("nbr_id") != F.col("query_id")).select(
-        "query_id", "qlabel", "nbr_id", "nlabel",
-        cosine(F.col("qv"), F.col("nv")).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("nbr_id")
+    q = _side(queries, "query", id_col, vec_col, F.col(label_col).alias("qlabel"))
+    scored = _candidates(q, c).select(
+        "query_id", "qlabel", "nbr_id", "nlabel", _cosine_score().alias("cos")
     )
 
     def top1(rel: DataFrame, id_out: str, cos_out: str) -> DataFrame:
-        return (
-            rel.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "query_id",
-                F.col("nbr_id").alias(id_out),
-                F.round("cos", 9).alias(cos_out),
-            )
+        return _topk(rel, "cos", 1, descending=True).select(
+            "query_id", F.col("nbr_id").alias(id_out), F.col("cos").alias(cos_out)
         )
 
     pos = top1(scored.filter(F.col("nlabel") == F.col("qlabel")), "pos_id", "pos_cos")

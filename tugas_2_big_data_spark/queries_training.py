@@ -2635,35 +2635,24 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank, whose length-n prefix IS the nprobe=n assignment, so ONE
     assignment + ONE invfile join + ONE scoring pass serve every
     curve point; the sweep becomes an exploded nprobe dimension over
-    the shared candidate relation (rank within (nprobe, query),
-    identical cosine-desc/nbr-asc order). The exact top-k baseline is
+    the shared candidate relation, ranked within (nprobe, query) by
+    the candidates and ranker `ivf_topk_from_index` serves with, so
+    the curve cannot drift from serving. The exact top-k baseline is
     computed once and checkpointed (25 rows) instead of re-deriving
     per branch."""
-    import posixpath
-
-    from pyspark.sql import Window
-
     emb = load_table(spark, "embeddings", sf_dir)
     q5 = emb.filter(F.col("vec_id") < 5)
     path = _ann_artifact_dir(sf_dir, "ivf")
     _ensure_artifact(
         spark, path, "invfile", lambda p: similarity.ivf_build_index(emb, p)
     )
-    cents = spark.read.parquet(posixpath.join(path, "centroids"))
-    cells = spark.read.parquet(posixpath.join(path, "invfile")).select(
-        F.col("cid").cast("long"), "nbr_id", "nbr_vec"
-    )
     # one assignment at max nprobe, affinity rank exposed; recomputing
     # this per consumer is 5 rows × an nlist-wide in-row sort — cheaper
     # than a checkpoint barrier, and parquet-backed stats keep the
     # invfile join a broadcast of the query side
-    qa = similarity._cell_assigner(cents)(
-        q5.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("query_vec"),
-        ),
-        "query_id",
-        "query_vec",
+    qa = similarity._cell_assigner(similarity._read(spark, path, "centroids"))(
+        similarity._side(q5, "query", "vec_id", "embedding"),
+        "query",
         max(_NPROBE_CURVE),
         rank_col="crn",
     )
@@ -2673,21 +2662,20 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(*[F.lit(int(n)).cast("long") for n in _NPROBE_CURVE])
         ).alias("nprobe")
 
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("nbr_id")
-    )
-    sel = (
-        qa.join(cells, "cid")
-        .filter(F.col("nbr_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", similarity.cosine(F.col("query_vec"), F.col("nbr_vec"))
+    cand = (
+        similarity._candidates(
+            qa, similarity._stored(spark, path, "invfile", "nbr_vec")
         )
+        .withColumn("cosine", similarity._cosine_score())
         .select("query_id", "nbr_id", "cosine", "crn", curve_dim())
-        .filter(F.col("crn") <= F.col("nprobe"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("nprobe", "query_id", "nbr_id")
     )
+    sel = similarity._topk(
+        cand.filter(F.col("crn") <= F.col("nprobe")),
+        "cosine",
+        5,
+        descending=True,
+        by=("nprobe",),
+    ).select("nprobe", "query_id", "nbr_id")
     ex = (
         similarity.cosine_topk(emb, q5, k=5)
         .select("query_id", "nbr_id")

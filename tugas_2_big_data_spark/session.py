@@ -152,28 +152,35 @@ def ship_package(spark: SparkSession) -> None:
     this module by name; when the driver process wasn't launched from
     the repo root, worker processes can't import it and every task dies
     with ModuleNotFoundError. Zip the package and addPyFile it — works
-    identically in local mode and on a real cluster.
+    identically in local mode and on a real cluster. The zip lives in a
+    `scratch_dir`, so it goes with the session; a failed ship is logged,
+    so it shows up here rather than as a ModuleNotFoundError in a
+    worker.
     """
     sc = spark.sparkContext
     app = sc.applicationId or "local"
     if app in _SHIPPED:
         return
     pkg_root = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"tugas_2_big_data_spark_pyfiles_{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for dirpath, dirnames, filenames in os.walk(pkg_root):
-            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.join(
-                        "tugas_2_big_data_spark", os.path.relpath(full, pkg_root)
-                    )
-                    zf.write(full, rel)
     try:
+        # under the SparkFiles root, so stop() deletes the zip with the
+        # session instead of leaving ~1 MB per process in the temp dir
+        zip_path = os.path.join(
+            scratch_dir("tugas_2_big_data_spark_pyfiles_"),
+            f"tugas_2_big_data_spark_pyfiles_{os.getpid()}.zip",
+        )
+        with zipfile.ZipFile(zip_path, "w") as zf:
+            for dirpath, dirnames, filenames in os.walk(pkg_root):
+                dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+                for fn in filenames:
+                    if fn.endswith(".py"):
+                        full = os.path.join(dirpath, fn)
+                        rel = os.path.join(
+                            "tugas_2_big_data_spark",
+                            os.path.relpath(full, pkg_root),
+                        )
+                        zf.write(full, rel)
         sc.addPyFile(zip_path)
-    except Exception:
-        pass  # same archive already registered on this context
+    except Exception as ex:  # noqa: BLE001 — workers may import it anyway
+        _log.warning("package zip not shipped to executors: %s", ex)
     _SHIPPED.add(app)
